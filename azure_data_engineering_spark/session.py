@@ -27,11 +27,13 @@ from pyspark.sql import SparkSession
 def get_spark(app_name: str = "azure-data-engineering-spark", *, shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or get) the configured SparkSession.
 
-    Honors SPARK_GRAFT_CPUS for local parallelism (driver contract).
+    Honors SPARK_GRAFT_CPUS for local parallelism (driver contract);
+    unset, it defaults to this machine's core count.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    default_cpus = str(os.cpu_count() or 1)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", default_cpus)
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = int(cpus if cpus.isdigit() else default_cpus)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")

@@ -11,47 +11,38 @@ Armbrust et al., "Delta Lake: High-Performance ACID Table Storage over
 Cloud Object Stores", VLDB 2020) at its minimum viable size.
 
 Layout:
-    {table}/data/commit-{N}/part-*.parquet   immutable data files
+    {table}/data/commit-*/part-*.parquet     immutable data files, one
+                                             directory per commit attempt
     {table}/_manifests/v{N}.json             full file list of snapshot N
     {table}/_current                         pointer file: "N"
 
-Commit protocol (any filesystem with atomic single-file rename):
-    1. write the new data files (distributed `df.write.parquet`)
-    2. write manifest v{N}.json naming the COMPLETE file set
+Commit protocol — the only one; snapshot_write, snapshot_merge and
+snapshot_apply_cdc all use it. It needs a filesystem with O_EXCL create
+and atomic single-file rename, and follows Delta Lake's log rule: the
+put-if-absent create of log entry N is the lock for commit N.
+    1. read the current version P and build the commit against it (a
+       merge reads snapshot P); stage its data files in a fresh
+       per-attempt directory (distributed `df.write.parquet`)
+    2. claim slot P+1: create v{P+1}.json with O_CREAT|O_EXCL, naming
+       the COMPLETE file set, after re-checking that the pointer is
+       still P — exactly one writer can own a slot
     3. write `_current.tmp-*` and `os.rename` it over `_current`
-Step 3 is the commit point. A crash before it leaves orphan data files
-and possibly an orphan manifest, but `_current` still resolves to the
-last complete snapshot — readers are never broken; `vacuum` removes
-the orphans. Readers go pointer → manifest → explicit file list, so
-they see one snapshot even while a writer is mid-commit.
+Step 3 is the commit point. The pointer only ever moves P -> P+1, by
+the unique owner of slot P+1, whose file set was built against P. A
+writer that loses step 2 leaves the table untouched, re-reads the new
+current snapshot, rebuilds against it and tries the next slot, so
+concurrent writers (a streaming CDC sink and a batch compaction job,
+say) serialize instead of one silently dropping the other's commit.
+Readers go pointer → manifest → explicit file list, so they see one
+snapshot even while a writer is mid-commit.
 
-Concurrent writers — version-fenced compare-and-swap (the same idea
-Delta Lake's transaction log uses: the O_EXCL create of log file N IS
-the lock for commit N):
-
-    snapshot_write_cas(df, table, expected_version=P)
-        commits ONLY as version P+1, and only if no other writer got
-        there first. The manifest file v{P+1}.json is created with
-        O_CREAT|O_EXCL — exactly one writer can own a version slot —
-        and the pointer is re-checked against P immediately before the
-        claim. A loser raises ConcurrentCommitError with the table
-        untouched (its staged data files are orphans vacuum removes).
-
-    snapshot_merge_cas / snapshot_apply_cdc_cas
-        retry-with-REBASE helpers: on a lost race they re-read the NEW
-        current snapshot, recompute the merge against it, and try the
-        next slot — so a streaming CDC sink and a batch compaction job
-        pointed at the same table serialize instead of last-writer-wins
-        silently dropping one commit.
-
-Why this is safe on any FS with O_EXCL + atomic rename: the pointer
-can only move P→P+1 by the unique owner of slot P+1, whose result was
-computed against snapshot P; a second writer that read P must lose the
-O_EXCL claim on P+1 and rebase on the new current. A writer that
-crashes BETWEEN claiming the slot and swapping the pointer leaves the
-slot dead (indistinguishable from slow on a plain filesystem — the
-classic limitation Delta solves with storage-level mutual exclusion);
-`release_orphan_slot` frees it explicitly after operator review.
+Crashes: before step 2, the staged files are orphans `vacuum` removes.
+Between steps 2 and 3 the slot is dead, which on a plain filesystem is
+indistinguishable from slow (the limitation Delta solves with
+storage-level mutual exclusion). A dead slot blocks every writer until
+`release_orphan_slot` frees it, a retry carrying the same `claim_tag`
+reclaims it, or a writer passing `stale_claim_timeout` reclaims it by
+age.
 """
 
 from __future__ import annotations
@@ -63,14 +54,19 @@ import re
 import shutil
 import tempfile
 import time as _time
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from azure_data_engineering_spark.operators.upsert import default_dedup_order, merge_upsert
+from azure_data_engineering_spark.operators.upsert import (
+    apply_cdc,
+    default_dedup_order,
+    merge_upsert,
+)
 
 _MANIFEST_RE = re.compile(r"v(\d+)\.json$")
+_MAX_RETRIES = 5  # consecutive lost races before a writer gives up
 
 
 def _manifest_dir(table: str) -> str:
@@ -107,30 +103,6 @@ def _read_manifest(table: str, version: int) -> list[str]:
         return json.load(f)["files"]
 
 
-def _commit(table: str, version: int, files: Sequence[str]) -> int:
-    """Steps 2+3 of the protocol: manifest, then atomic pointer swap."""
-    os.makedirs(_manifest_dir(table), exist_ok=True)
-    manifest = os.path.join(_manifest_dir(table), f"v{version}.json")
-    with open(manifest, "w") as f:
-        json.dump({"version": version, "files": sorted(files)}, f)
-    fd, tmp = tempfile.mkstemp(prefix="_current.tmp-", dir=table)
-    with os.fdopen(fd, "w") as f:
-        f.write(str(version))
-    os.rename(tmp, _pointer_path(table))  # the commit point
-    return version
-
-
-def _write_data(df: DataFrame, table: str, version: int) -> list[str]:
-    """Step 1: distributed write of this commit's data files; returns
-    their table-relative paths."""
-    commit_dir = os.path.join(table, "data", f"commit-{version}")
-    df.write.parquet(commit_dir)
-    return [
-        os.path.relpath(p, table)
-        for p in glob.glob(os.path.join(glob.escape(commit_dir), "part-*.parquet"))
-    ]
-
-
 class ConcurrentCommitError(RuntimeError):
     """Another writer claimed the next version slot, or the table moved
     past expected_version. The losing commit left the table untouched;
@@ -152,16 +124,33 @@ def _claim_age(manifest: str) -> float | None:
         return None
 
 
-def _commit_cas(
+def _stage_data(df: DataFrame, table: str) -> list[str]:
+    """Step 1: distributed write of one attempt's data files under a
+    fresh directory, so two racers never collide on a path; returns
+    their table-relative paths. A losing attempt's files are orphans
+    vacuum removes."""
+    root = os.path.join(table, "data")
+    os.makedirs(root, exist_ok=True)
+    commit_dir = tempfile.mkdtemp(prefix="commit-", dir=root)
+    os.rmdir(commit_dir)  # parquet writer wants to create it itself
+    df.write.parquet(commit_dir)
+    return [
+        os.path.relpath(p, table)
+        for p in glob.glob(os.path.join(glob.escape(commit_dir), "part-*.parquet"))
+    ]
+
+
+def _commit(
     table: str,
     expected_version: int | None,
     files: Sequence[str],
     claim_tag: str | None = None,
     stale_claim_timeout: float | None = None,
 ) -> int:
-    """Version-fenced commit: claim slot expected+1 via O_EXCL manifest
-    create, then swap the pointer. Raises ConcurrentCommitError if the
-    pointer moved or the slot is already owned.
+    """Steps 2+3, the only code that writes a manifest or moves the
+    pointer: claim slot expected+1 via O_EXCL manifest create, then
+    swap the pointer. Raises ConcurrentCommitError if the pointer moved
+    or the slot is already owned.
 
     `claim_tag` identifies the LOGICAL work unit (e.g. "<checkpoint>
     #b<batch_id>" for a streaming sink). If the slot is already claimed
@@ -265,153 +254,40 @@ def _commit_cas(
     return version
 
 
-def _write_data_unique(df: DataFrame, table: str, version: int) -> list[str]:
-    """CAS step 1: stage data files under a per-ATTEMPT unique dir so
-    two racers for the same slot never collide on a directory; the
-    loser's files are orphans vacuum removes."""
-    commit_dir = tempfile.mkdtemp(
-        prefix=f"commit-{version}-", dir=_ensure_data_root(table)
-    )
-    os.rmdir(commit_dir)  # parquet writer wants to create it itself
-    df.write.parquet(commit_dir)
-    return [
-        os.path.relpath(p, table)
-        for p in glob.glob(os.path.join(glob.escape(commit_dir), "part-*.parquet"))
-    ]
-
-
-def _ensure_data_root(table: str) -> str:
-    root = os.path.join(table, "data")
-    os.makedirs(root, exist_ok=True)
-    return root
-
-
-def snapshot_write_cas(
-    df: DataFrame,
+def _commit_loop(
     table: str,
-    expected_version: int | None,
-    mode: str = "overwrite",
+    build: Callable[[int | None], list[str]],
     claim_tag: str | None = None,
     stale_claim_timeout: float | None = None,
 ) -> int:
-    """Commit df as version expected+1 IFF the table is still at
-    `expected_version` (None = must still be empty) and no concurrent
-    writer owns that slot. Raises ConcurrentCommitError on a lost race
-    — the table is untouched and the caller must rebase (re-read the
-    new current snapshot, recompute, retry). `stale_claim_timeout`
-    enables age-based reclaim of a dead writer's orphan slot — see
-    _commit_cas for the policy and its documented unsafe window."""
-    if mode not in ("overwrite", "append"):
-        raise ValueError(f"mode must be overwrite|append, got {mode!r}")
-    os.makedirs(table, exist_ok=True)
-    version = (expected_version or 0) + 1
-    files = _write_data_unique(df, table, version)
-    if mode == "append" and expected_version is not None:
-        files = list(_read_manifest(table, expected_version)) + files
-    return _commit_cas(
-        table,
-        expected_version,
-        files,
-        claim_tag=claim_tag,
-        stale_claim_timeout=stale_claim_timeout,
-    )
-
-
-def snapshot_merge_cas(
-    source: DataFrame,
-    table: str,
-    pk: Sequence[str],
-    dedup_order: Sequence | None = None,
-    max_retries: int = 5,
-    claim_tag: str | None = None,
-    stale_claim_timeout: float | None = None,
-) -> int:
-    """snapshot_merge with retry-and-REBASE under contention: each
-    attempt reads the CURRENT snapshot, computes the merge against it,
-    and commits with that version as the fence — a lost race recomputes
-    against the winner's result instead of silently overwriting it.
-    This is the commit discipline a streaming CDC sink and a batch
-    compaction job need to share one table."""
-    spark = source.sparkSession
-    order = (
-        list(dedup_order)
-        if dedup_order is not None
-        else default_dedup_order(source.columns, pk)
-    )
+    """The rebase loop every writer commits through: read the current
+    version, `build` the commit's complete file list against it, claim
+    the next slot; on a lost race, rebuild against the winner's
+    snapshot and try again. A build is reused while the pointer has not
+    moved (the slot's holder is between its claim and its pointer swap,
+    or dead), so waiting out a held slot costs a short backoff, not a
+    recomputed Spark job. The final error carries the last loss's
+    reason."""
+    built: dict[int | None, list[str]] = {}
     last: ConcurrentCommitError | None = None
-    for _ in range(max_retries):
-        expected = current_version(table)
-        if expected is None:
-            from azure_data_engineering_spark.operators.relational import (
-                dedup_keep_first,
-            )
-
-            merged = dedup_keep_first(source, pk, order)
-        else:
-            target = snapshot_read(spark, table, version=expected)
-            merged = merge_upsert(target, source, pk, dedup_order=order)
+    for attempt in range(_MAX_RETRIES):
+        if attempt:
+            _time.sleep(0.01 * 2**attempt)
+        base = current_version(table)
+        if base not in built:
+            built = {base: build(base)}
         try:
-            return snapshot_write_cas(
-                merged,
+            return _commit(
                 table,
-                expected,
-                mode="overwrite",
+                base,
+                built[base],
                 claim_tag=claim_tag,
                 stale_claim_timeout=stale_claim_timeout,
             )
         except ConcurrentCommitError as exc:
             last = exc
-            continue
     raise ConcurrentCommitError(
-        f"{table}: lost {max_retries} consecutive commit races"
-    ) from last
-
-
-def snapshot_apply_cdc_cas(
-    changes: DataFrame,
-    table: str,
-    pk: Sequence[str],
-    op_col: str = "op",
-    dedup_order: Sequence | None = None,
-    max_retries: int = 5,
-    claim_tag: str | None = None,
-    stale_claim_timeout: float | None = None,
-) -> int:
-    """snapshot_apply_cdc with the same retry-and-rebase CAS discipline
-    as snapshot_merge_cas — the changelog batch re-applies cleanly
-    against whatever snapshot won the race, because I/U/D application
-    is computed fresh from the current table on every attempt."""
-    from azure_data_engineering_spark.operators.upsert import apply_cdc
-
-    spark = changes.sparkSession
-    payload = [c for c in changes.columns if c != op_col]
-    order = (
-        list(dedup_order)
-        if dedup_order is not None
-        else default_dedup_order(payload, pk)
-    )
-    last: ConcurrentCommitError | None = None
-    for _ in range(max_retries):
-        expected = current_version(table)
-        if expected is None:
-            target = spark.createDataFrame([], changes.select(*payload).schema)
-        else:
-            target = snapshot_read(spark, table, version=expected)
-        applied = apply_cdc(target, changes, pk, op_col=op_col, dedup_order=order)
-        try:
-            return snapshot_write_cas(
-                applied,
-                table,
-                expected,
-                mode="overwrite",
-                claim_tag=claim_tag,
-                stale_claim_timeout=stale_claim_timeout,
-            )
-        except ConcurrentCommitError as exc:
-            last = exc
-            continue
-    raise ConcurrentCommitError(
-        f"{table}: lost {max_retries} consecutive commit races"
+        f"{table}: lost {_MAX_RETRIES} consecutive commit races; last: {last}"
     ) from last
 
 
@@ -435,19 +311,20 @@ def release_orphan_slot(table: str, version: int) -> None:
 
 def snapshot_write(df: DataFrame, table: str, mode: str = "overwrite") -> int:
     """Commit df as the next snapshot. `overwrite` replaces the file
-    set; `append` unions the previous snapshot's files with the new
-    ones — an O(new data) commit, no rewrite of existing files."""
+    set; `append` unions the current snapshot's files with the new
+    ones — an O(new data) commit, no rewrite of existing files. The
+    data is staged once; a lost race only re-reads the winner's file
+    list."""
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be overwrite|append, got {mode!r}")
-    os.makedirs(table, exist_ok=True)
-    prev = current_version(table)
-    # next version past BOTH the pointer and any orphan manifest a
-    # crashed commit left behind, so the orphan is never overwritten
-    version = max([0, *snapshot_versions(table), prev or 0]) + 1
-    files = _write_data(df, table, version)
-    if mode == "append" and prev is not None:
-        files = list(_read_manifest(table, prev)) + files
-    return _commit(table, version, files)
+    new = _stage_data(df, table)
+
+    def build(base: int | None) -> list[str]:
+        if mode == "append" and base is not None:
+            return _read_manifest(table, base) + new
+        return new
+
+    return _commit_loop(table, build)
 
 
 def snapshot_read(spark: SparkSession, table: str, version: int | None = None) -> DataFrame:
@@ -461,11 +338,40 @@ def snapshot_read(spark: SparkSession, table: str, version: int | None = None) -
     return spark.read.parquet(*files)
 
 
+def _upsert_commit(
+    rows: DataFrame,
+    payload: Sequence[str],
+    table: str,
+    pk: Sequence[str],
+    dedup_order: Sequence | None,
+    apply: Callable[[DataFrame, list], DataFrame],
+    claim_tag: str | None,
+    stale_claim_timeout: float | None,
+) -> int:
+    """What snapshot_merge and snapshot_apply_cdc share: default the
+    in-batch dedup order over the `payload` columns, read the target
+    at each attempt's base version (an empty frame of the payload
+    schema on an empty table), and stage `apply(target, order)`."""
+    spark = rows.sparkSession
+    order = list(dedup_order) if dedup_order is not None else default_dedup_order(payload, pk)
+
+    def build(base: int | None) -> list[str]:
+        if base is None:
+            target = spark.createDataFrame([], rows.select(*payload).schema)
+        else:
+            target = snapshot_read(spark, table, version=base)
+        return _stage_data(apply(target, order), table)
+
+    return _commit_loop(table, build, claim_tag, stale_claim_timeout)
+
+
 def snapshot_merge(
     source: DataFrame,
     table: str,
     pk: Sequence[str],
     dedup_order: Sequence | None = None,
+    claim_tag: str | None = None,
+    stale_claim_timeout: float | None = None,
 ) -> int:
     """MERGE source into the table as one atomic commit: read the
     current snapshot, apply merge_upsert (update-matched /
@@ -473,16 +379,19 @@ def snapshot_merge(
     as the next snapshot. Readers see the pre-merge table until the
     pointer swaps — the reference's staging-then-single-MERGE contract
     (PGHelperFunction.py:74-77) on files. First merge into an empty
-    table degenerates to an overwrite commit of the deduped source."""
-    spark = source.sparkSession
-    order = list(dedup_order) if dedup_order is not None else default_dedup_order(source.columns, pk)
-    if current_version(table) is None:
-        from azure_data_engineering_spark.operators.relational import dedup_keep_first
-
-        return snapshot_write(dedup_keep_first(source, pk, order), table, mode="overwrite")
-    target = snapshot_read(spark, table)
-    merged = merge_upsert(target, source, pk, dedup_order=order)
-    return snapshot_write(merged, table, mode="overwrite")
+    table commits the deduped source. `claim_tag` and
+    `stale_claim_timeout` are the dead-slot recovery policies of
+    _commit."""
+    return _upsert_commit(
+        source,
+        source.columns,
+        table,
+        pk,
+        dedup_order,
+        lambda target, order: merge_upsert(target, source, pk, dedup_order=order),
+        claim_tag,
+        stale_claim_timeout,
+    )
 
 
 def snapshot_apply_cdc(
@@ -491,24 +400,28 @@ def snapshot_apply_cdc(
     pk: Sequence[str],
     op_col: str = "op",
     dedup_order: Sequence | None = None,
+    claim_tag: str | None = None,
+    stale_claim_timeout: float | None = None,
 ) -> int:
     """Apply an I/U/D changelog batch to the table as one atomic
     commit (operators/upsert.apply_cdc semantics: upserts merge,
     deletes remove the key, same-batch conflicts resolve by
     dedup_order with the winner's op deciding). The delete-capable
-    sibling of snapshot_merge; an all-delete first batch on an empty
-    table commits an empty snapshot."""
-    from azure_data_engineering_spark.operators.upsert import apply_cdc
-
-    spark = changes.sparkSession
-    payload = [c for c in changes.columns if c != op_col]
-    order = list(dedup_order) if dedup_order is not None else default_dedup_order(payload, pk)
-    if current_version(table) is None:
-        target = spark.createDataFrame([], changes.select(*payload).schema)
-    else:
-        target = snapshot_read(spark, table)
-    applied = apply_cdc(target, changes, pk, op_col=op_col, dedup_order=order)
-    return snapshot_write(applied, table, mode="overwrite")
+    sibling of snapshot_merge, with the same `claim_tag` and
+    `stale_claim_timeout`; an all-delete first batch on an empty table
+    commits an empty snapshot."""
+    return _upsert_commit(
+        changes,
+        [c for c in changes.columns if c != op_col],
+        table,
+        pk,
+        dedup_order,
+        lambda target, order: apply_cdc(
+            target, changes, pk, op_col=op_col, dedup_order=order
+        ),
+        claim_tag,
+        stale_claim_timeout,
+    )
 
 
 def snapshot_diff(
@@ -579,25 +492,23 @@ def snapshot_diff(
 
 
 def vacuum(table: str, keep_last: int = 1) -> int:
-    """Drop manifests older than the newest `keep_last` (never the
-    current pointer's) and every data file no kept manifest references
-    — including files orphaned by crashed commits. Returns the number
-    of data files deleted."""
+    """Drop committed manifests older than the newest `keep_last` and
+    every data file no remaining manifest references — including files
+    orphaned by crashed or losing commits. Only versions at or below
+    the pointer count toward `keep_last`, so the current one is always
+    kept; claims above the pointer (a live writer mid-commit, or a dead
+    slot awaiting release_orphan_slot) are left alone together with the
+    files they name. Returns the number of data files deleted."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    versions = snapshot_versions(table)
-    cur = current_version(table)
-    keep = set(versions[-keep_last:])
-    if cur is not None:
-        keep.add(cur)
+    cur = current_version(table) or 0
+    committed = [v for v in snapshot_versions(table) if v <= cur]
+    for v in committed[:-keep_last]:
+        os.remove(os.path.join(_manifest_dir(table), f"v{v}.json"))
     referenced: set[str] = set()
-    for v in sorted(keep):
-        if os.path.exists(os.path.join(_manifest_dir(table), f"v{v}.json")):
-            referenced.update(_read_manifest(table, v))
+    for v in snapshot_versions(table):
+        referenced.update(_read_manifest(table, v))
     removed = 0
-    for v in versions:
-        if v not in keep:
-            os.remove(os.path.join(_manifest_dir(table), f"v{v}.json"))
     data_root = os.path.join(table, "data")
     for p in glob.glob(os.path.join(glob.escape(data_root), "commit-*", "*.parquet")):
         if os.path.relpath(p, table) not in referenced:

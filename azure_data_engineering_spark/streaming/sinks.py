@@ -115,28 +115,23 @@ def stream_upsert_to_snapshot(
     time-travelable. This is the object-store-safe variant of
     stream_upsert_to_parquet — the commit point is a single pointer
     rename, not a directory swap — and the closest filesystem analogue
-    of MERGE-per-batch on Delta/Iceberg. Commits go through the
-    version-fenced CAS path (snapshot_merge_cas), so this sink can
-    share the table with a concurrent batch writer (e.g. compaction)
-    without last-writer-wins dropping a commit — a lost race rebases
-    on the winner's snapshot and retries."""
-    from azure_data_engineering_spark.sources.snapshot import snapshot_merge_cas
+    of MERGE-per-batch on Delta/Iceberg. Commits are version-fenced
+    (every snapshot_merge is), so this sink can share the table with a
+    concurrent batch writer (e.g. compaction) without last-writer-wins
+    dropping a commit — a lost race rebases on the winner's snapshot
+    and retries."""
+    from azure_data_engineering_spark.sources.snapshot import snapshot_merge
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        order = (
-            list(dedup_order)
-            if dedup_order is not None
-            else default_dedup_order(batch_df.columns, pk)
-        )
         # claim tag = (checkpoint, batch): a RESTARTED attempt of this
         # same batch may reclaim the slot its dead predecessor left
         # between claim and pointer swap (single live attempt per
         # query+batch is Structured Streaming's own guarantee)
-        snapshot_merge_cas(
+        snapshot_merge(
             batch_df,
             table,
             pk,
-            dedup_order=order,
+            dedup_order=dedup_order,
             claim_tag=f"{checkpoint or query_name}#b{batch_id}",
         )
 
@@ -163,15 +158,15 @@ def stream_cdc_to_snapshot(
     absent from version N but still visible when time-traveling to
     N-1. This is the Debezium-consumer shape: upstream row images
     tagged I/U/D, downstream table always a consistent version.
-    Commits are version-fenced (snapshot_apply_cdc_cas): a concurrent
-    batch writer on the same table costs this sink a rebase-and-retry,
-    never a silently dropped commit."""
-    from azure_data_engineering_spark.sources.snapshot import snapshot_apply_cdc_cas
+    Commits are version-fenced (every snapshot_apply_cdc is): a
+    concurrent batch writer on the same table costs this sink a
+    rebase-and-retry, never a silently dropped commit."""
+    from azure_data_engineering_spark.sources.snapshot import snapshot_apply_cdc
 
     def cdc_batch(batch_df: DataFrame, batch_id: int) -> None:
         # see upsert_batch: batch-keyed claim tag enables crash-restart
         # self-recovery without weakening the foreign-writer fence
-        snapshot_apply_cdc_cas(
+        snapshot_apply_cdc(
             batch_df,
             table,
             pk,

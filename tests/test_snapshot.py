@@ -65,7 +65,7 @@ class TestCrashAndVacuum:
     def test_crashed_commit_is_invisible_and_skipped(self, spark, table):
         sn.snapshot_write(_df(spark, [(1, "a")]), table)
         # simulate a crash after step 2 (manifest written, pointer not)
-        files = sn._write_data(_df(spark, [(9, "z")]), table, 2)
+        files = sn._stage_data(_df(spark, [(9, "z")]), table)
         os.makedirs(sn._manifest_dir(table), exist_ok=True)
         import json
 
@@ -75,9 +75,15 @@ class TestCrashAndVacuum:
         assert sn.current_version(table) == 1
         got = {(r.k, r.v) for r in sn.snapshot_read(spark, table).collect()}
         assert got == {(1, "a")}
-        # the next commit skips past the orphan version
+        # the dead slot fences every writer, naming the slot and the fix
+        with pytest.raises(sn.ConcurrentCommitError, match="slot v2") as err:
+            sn.snapshot_write(_df(spark, [(2, "b")]), table, mode="append")
+        assert "release_orphan_slot" in str(err.value)
+        assert sn.current_version(table) == 1
+        # once an operator releases it, the next commit takes v2
+        sn.release_orphan_slot(table, 2)
         v = sn.snapshot_write(_df(spark, [(2, "b")]), table, mode="append")
-        assert v == 3
+        assert v == 2
         got = {(r.k, r.v) for r in sn.snapshot_read(spark, table).collect()}
         assert got == {(1, "a"), (2, "b")}
 
@@ -92,12 +98,30 @@ class TestCrashAndVacuum:
 
     def test_vacuum_removes_crash_orphans(self, spark, table):
         sn.snapshot_write(_df(spark, [(1, "a")]), table)
-        orphans = sn._write_data(_df(spark, [(9, "z")]), table, 7)  # no manifest, no pointer
+        orphans = sn._stage_data(_df(spark, [(9, "z")]), table)  # no manifest, no pointer
         assert orphans
         removed = sn.vacuum(table, keep_last=1)
         assert removed == len(orphans)
         got = {(r.k, r.v) for r in sn.snapshot_read(spark, table).collect()}
         assert got == {(1, "a")}
+
+    def test_vacuum_keep_last_counts_only_committed_versions(self, spark, table):
+        """A dead claim above the pointer is not a version to keep: with
+        v1, v2 committed and a claim at v3, keep_last=2 keeps v1 and v2
+        (time travel to v1 still works) and leaves the claim for
+        release_orphan_slot."""
+        sn.snapshot_write(_df(spark, [(1, "a")]), table)
+        sn.snapshot_write(_df(spark, [(2, "b")]), table)  # overwrite
+        dead = os.path.join(sn._manifest_dir(table), "v3.json")
+        with open(dead, "w") as f:
+            f.write('{"version": 3, "files": []}')
+        sn.vacuum(table, keep_last=2)
+        assert sn.snapshot_versions(table) == [1, 2, 3]
+        v1 = {(r.k, r.v) for r in sn.snapshot_read(spark, table, version=1).collect()}
+        assert v1 == {(1, "a")}
+        assert sn.current_version(table) == 2
+        sn.release_orphan_slot(table, 3)
+        assert sn.snapshot_versions(table) == [1, 2]
 
 
 class TestStreamingSink:

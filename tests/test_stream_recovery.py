@@ -91,13 +91,13 @@ def test_crash_before_pointer_swap_then_resume(spark, tmp_path, monkeypatch):
     # RECLAIMS it instead of being fenced out (a FOREIGN writer's claim
     # would still block — tests/test_snapshot_cas.py covers that side).
     applied = []
-    real_apply = S.snapshot_apply_cdc_cas
+    real_apply = S.snapshot_apply_cdc
 
     def counting_apply(changes, table_, pk, **kw):
         applied.append(changes.count())
         return real_apply(changes, table_, pk, **kw)
 
-    monkeypatch.setattr(S, "snapshot_apply_cdc_cas", counting_apply)
+    monkeypatch.setattr(S, "snapshot_apply_cdc", counting_apply)
     q3 = _start(spark, src, table, ckpt)
     q3.awaitTermination()
 
