@@ -202,31 +202,15 @@ def brute_force_top_k_arrow(
     return _topk_pairs(scored, "query_id", k, round_digits)
 
 
-def hyperplane_bucket(vec: Column, dim: int, planes: int = 8, table: int = 0) -> Column:
-    """Sign-bit LSH bucket id: `planes` pseudo-random hyperplanes with
-    deterministic coefficients h[p][i] = sin((table*planes + p)*dim + i)
-    (fixed, seed-free, reproducible across runs). Returns int bucket."""
-    bucket = F.lit(0)
-    for p in range(planes):
-        coeffs = F.array(*[F.lit(math.sin((table * planes + p) * dim + i)) for i in range(dim)])
-        proj = F.aggregate(
-            F.zip_with(vec, coeffs, lambda x, h: x.cast("double") * h),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return bucket
-
-
 def hyperplane_buckets_arrow(vec_col: Column, dim: int, planes: int, tables: int) -> Column:
-    """All per-table bucket ids in ONE Arrow-batched numpy matmul:
-    (batch, dim) @ (dim, tables*planes) then sign-bits → ints. Same
-    hyperplane family as hyperplane_bucket (coefficients
-    sin((t*planes+p)*dim + i)); bucket ids can differ from the
-    expression version only on exact sign boundaries (summation
-    order), which ANN semantics tolerate. This is the documented
-    "vectorized Pandas UDF for embedding math" path — ~30x the
-    interpreted per-plane fold."""
+    """Sign-bit LSH bucket ids for `tables` hash tables of `planes`
+    pseudo-random hyperplanes each, in ONE Arrow-batched numpy matmul:
+    (batch, dim) @ (dim, tables*planes), then sign bits → one int per
+    table. Coefficients are deterministic, h[t][p][i] =
+    sin((t*planes + p)*dim + i) — fixed, seed-free and reproducible
+    across runs. This is the documented "vectorized Pandas UDF for
+    embedding math" path — ~30x an interpreted per-plane expression
+    fold."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -265,7 +249,6 @@ def lsh_bucketed_top_k(
     planes: int = 8,
     tables: int = 4,
     round_digits: int | None = 6,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Approximate top-k via multi-table hyperplane LSH: `tables`
     independent hash tables of 2^planes buckets each; a pair is a
@@ -277,12 +260,7 @@ def lsh_bucketed_top_k(
     """
 
     def banded(df: DataFrame, out_id: str, out_vec: str) -> DataFrame:
-        if use_arrow:
-            buckets = hyperplane_buckets_arrow(F.col(vec_col), dim, planes, tables)
-        else:
-            buckets = F.array(
-                *[hyperplane_bucket(F.col(vec_col), dim, planes, t) for t in range(tables)]
-            )
+        buckets = hyperplane_buckets_arrow(F.col(vec_col), dim, planes, tables)
         return df.select(
             F.col(id_col).alias(out_id),
             F.col(vec_col).alias(out_vec),

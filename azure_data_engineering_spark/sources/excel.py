@@ -6,17 +6,18 @@ per sheet named `{sanitized_basename}_{sheet}` (:30-31), cells
 stringified row-by-row with the destructive sanitize chain (:36-41).
 
 Spark-first design:
-- few/small files: driver-side openpyxl → createDataFrame per sheet;
+- few/small files: driver-side parse → createDataFrame per sheet;
 - many/large files (the 100 TB shape): `spark.read.format("binaryFile")`
   over the folder, then mapInPandas fans each workbook's sheets out on
   executors — the driver never holds file bytes.
 
-Byte-level parsing auto-selects an engine at runtime: openpyxl when
-installed, else the built-in stdlib reader below (zipfile + ElementTree
-over the public OOXML package format — ECMA-376: xl/workbook.xml for
-sheet order, xl/_rels for sheet targets, xl/sharedStrings.xml, and
-shared/inline/numeric/boolean cell types). No pip dependency needed to
-ingest real .xlsx files.
+One parser, on the driver and on every executor: the stdlib reader
+below (zipfile + ElementTree over the public OOXML package format —
+ECMA-376: xl/workbook.xml for sheet order, xl/_rels for sheet targets,
+xl/sharedStrings.xml, and shared/inline/numeric/boolean cell types),
+so a workbook ingests to the same strings wherever it is parsed (a
+boolean is "TRUE"/"FALSE", a date its stored serial). No pip dependency
+needed to ingest real .xlsx files.
 """
 
 from __future__ import annotations
@@ -30,14 +31,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from azure_data_engineering_spark.functions.sanitize import sanitize_cell
-
-try:  # preferred engine when available
-    import openpyxl  # type: ignore  # noqa: F401
-
-    _HAVE_OPENPYXL = True
-except ImportError:
-    _HAVE_OPENPYXL = False
-
 
 # ------------------------------------------------------------------
 # Stdlib OOXML reader/writer (public format, ECMA-376 SpreadsheetML).
@@ -215,20 +208,7 @@ def select_sheets(all_sheets: Iterable[str], sheet_list: str = "all") -> list[st
     return [s for s in names if s in wanted]
 
 
-def _openpyxl_parse(stream) -> dict[str, list[list[str]]]:  # pragma: no cover - needs openpyxl
-    wb = openpyxl.load_workbook(stream, read_only=True, data_only=True)
-    return {
-        ws.title: [["" if c is None else str(c) for c in row] for row in ws.iter_rows(values_only=True)]
-        for ws in wb.worksheets
-    }
-
-
 def _default_loader(path: str) -> dict[str, list[list[str]]]:
-    """Engine auto-selection: openpyxl when installed (richer format
-    coverage: .xlsm, formulas-as-values), else the stdlib OOXML parser
-    above — real .xlsx files ingest either way."""
-    if _HAVE_OPENPYXL:  # pragma: no cover - openpyxl absent in test env
-        return _openpyxl_parse(path)
     with open(path, "rb") as fh:
         return parse_xlsx_bytes(fh.read())
 
@@ -249,7 +229,7 @@ def ingest_excel_distributed(
     Returns one long DataFrame: (source_name, sheet, row_idx, cells
     array<string>) — cells stay schema-less all-string like the
     reference's CSV stage. bytes_loader(name, payload) -> {sheet:
-    rows}; defaults to openpyxl (gated), tests inject a fake.
+    rows}; defaults to parse_xlsx_bytes, tests inject a fake.
     """
     import re as _re
 
@@ -260,10 +240,6 @@ def ingest_excel_distributed(
     if bytes_loader is None:
 
         def bytes_loader(name: str, payload: bytes):
-            # engine auto-selection per executor: openpyxl if the
-            # workers have it, else the stdlib OOXML parser
-            if _HAVE_OPENPYXL:  # pragma: no cover - openpyxl absent in test env
-                return _openpyxl_parse(io.BytesIO(payload))
             return parse_xlsx_bytes(payload)
 
     files = (

@@ -36,19 +36,27 @@ say) serialize instead of one silently dropping the other's commit.
 Readers go pointer → manifest → explicit file list, so they see one
 snapshot even while a writer is mid-commit.
 
-Crashes: before step 2, the staged files are orphans `vacuum` removes.
-Between steps 2 and 3 the slot is dead, which on a plain filesystem is
-indistinguishable from slow (the limitation Delta solves with
-storage-level mutual exclusion). A dead slot blocks every writer until
-`release_orphan_slot` frees it, a retry carrying the same `claim_tag`
-reclaims it, or a writer passing `stale_claim_timeout` reclaims it by
-age.
+Compaction (`snapshot_compact`) is one more writer on this protocol,
+as OPTIMIZE is an ordinary log commit in Delta: it stages the current
+snapshot's rows in fewer files and claims the next slot, so a merge
+that lands mid-compaction forces a rebuild against the winner instead
+of being lost, and the pre-compaction version stays time-travelable.
+
+Crashes: before step 2, the staged files are orphans `vacuum` removes
+once they are older than `_ORPHAN_GRACE_S` (until then a writer still
+staging looks the same as a dead one). Between steps 2 and 3 the slot
+is dead, which on a plain filesystem is indistinguishable from slow
+(the limitation Delta solves with storage-level mutual exclusion). A
+dead slot blocks every writer until `release_orphan_slot` frees it, a
+retry carrying the same `claim_tag` reclaims it, or a writer passing
+`stale_claim_timeout` reclaims it by age.
 """
 
 from __future__ import annotations
 
 import glob
 import json
+import math
 import os
 import re
 import shutil
@@ -67,6 +75,10 @@ from azure_data_engineering_spark.operators.upsert import (
 
 _MANIFEST_RE = re.compile(r"v(\d+)\.json$")
 _MAX_RETRIES = 5  # consecutive lost races before a writer gives up
+# an unreferenced data/commit-* dir younger than this may belong to a
+# writer still staging, so vacuum leaves it alone (Iceberg's
+# remove_orphan_files default)
+_ORPHAN_GRACE_S = 3 * 24 * 3600
 
 
 def _manifest_dir(table: str) -> str:
@@ -128,7 +140,7 @@ def _stage_data(df: DataFrame, table: str) -> list[str]:
     """Step 1: distributed write of one attempt's data files under a
     fresh directory, so two racers never collide on a path; returns
     their table-relative paths. A losing attempt's files are orphans
-    vacuum removes."""
+    vacuum removes once the grace period has passed."""
     root = os.path.join(table, "data")
     os.makedirs(root, exist_ok=True)
     commit_dir = tempfile.mkdtemp(prefix="commit-", dir=root)
@@ -424,6 +436,35 @@ def snapshot_apply_cdc(
     )
 
 
+def snapshot_compact(
+    spark: SparkSession,
+    table: str,
+    target_bytes: int = 128 * 1024 * 1024,
+    sort_cols: Sequence[str] | None = None,
+) -> int:
+    """Rewrite the current snapshot into files of ~target_bytes as the
+    next version; returns it. The file count is ceil(bytes the current
+    manifest names / target_bytes), at least 1: coalesce() when
+    shrinking (no shuffle, the usual case), repartition() when growing.
+    sort_cols range-partitions and sorts within files, so min/max footer
+    stats prune single-column predicates. A commit that lands while the
+    rewrite stages forces a rebuild against it; the pre-compaction
+    version stays readable until vacuum expires it."""
+
+    def build(base: int | None) -> list[str]:
+        df = snapshot_read(spark, table, version=base)
+        files = _read_manifest(table, base)
+        size = sum(os.path.getsize(os.path.join(table, f)) for f in files)
+        n = max(1, math.ceil(size / target_bytes))
+        if sort_cols:
+            df = df.repartitionByRange(n, *sort_cols).sortWithinPartitions(*sort_cols)
+        else:
+            df = df.coalesce(n) if n <= len(files) else df.repartition(n)
+        return _stage_data(df, table)
+
+    return _commit_loop(table, build)
+
+
 def snapshot_diff(
     spark: SparkSession,
     table: str,
@@ -493,28 +534,41 @@ def snapshot_diff(
 
 def vacuum(table: str, keep_last: int = 1) -> int:
     """Drop committed manifests older than the newest `keep_last` and
-    every data file no remaining manifest references — including files
-    orphaned by crashed or losing commits. Only versions at or below
-    the pointer count toward `keep_last`, so the current one is always
-    kept; claims above the pointer (a live writer mid-commit, or a dead
-    slot awaiting release_orphan_slot) are left alone together with the
-    files they name. Returns the number of data files deleted."""
+    the data files only they name. Only versions at or below the pointer
+    count toward `keep_last`, so the current one is always kept; claims
+    above the pointer (a live writer mid-commit, or a dead slot awaiting
+    release_orphan_slot) are left alone together with the files they
+    name. A file no manifest names — a crashed or losing commit's, or
+    one a writer is still staging — goes only once the newest mtime in
+    its commit directory is older than `_ORPHAN_GRACE_S`. Returns the
+    number of data files deleted."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     cur = current_version(table) or 0
     committed = [v for v in snapshot_versions(table) if v <= cur]
+    expired: set[str] = set()
     for v in committed[:-keep_last]:
+        expired.update(_read_manifest(table, v))
         os.remove(os.path.join(_manifest_dir(table), f"v{v}.json"))
     referenced: set[str] = set()
     for v in snapshot_versions(table):
         referenced.update(_read_manifest(table, v))
     removed = 0
-    data_root = os.path.join(table, "data")
-    for p in glob.glob(os.path.join(glob.escape(data_root), "commit-*", "*.parquet")):
-        if os.path.relpath(p, table) not in referenced:
+    horizon = _time.time() - _ORPHAN_GRACE_S
+    for d in glob.glob(os.path.join(glob.escape(os.path.join(table, "data")), "commit-*")):
+        stale = max(
+            [os.path.getmtime(d)] + [os.path.getmtime(e.path) for e in os.scandir(d)]
+        ) < horizon
+        parts = glob.glob(os.path.join(glob.escape(d), "*.parquet"))
+        doomed = [
+            p
+            for p in parts
+            if (rel := os.path.relpath(p, table)) not in referenced
+            and (stale or rel in expired)
+        ]
+        for p in doomed:
             os.remove(p)
-            removed += 1
-    for d in glob.glob(os.path.join(glob.escape(data_root), "commit-*")):
-        if not os.listdir(d):
-            shutil.rmtree(d, ignore_errors=True)
+        removed += len(doomed)
+        if len(doomed) == len(parts) and (doomed or stale):
+            shutil.rmtree(d, ignore_errors=True)  # no live file left in it
     return removed

@@ -37,9 +37,9 @@ Scale notes:
   proves the pattern for the CDC sink);
 - maintenance: append commits add O(1) files per batch, so after many
   batches the store accumulates small files and old manifests — run
-  sources/compaction.compact_parquet on a re-snapshot plus
-  sources/snapshot.vacuum(keep_last=N) periodically, exactly like any
-  log-structured table.
+  sources/snapshot.snapshot_compact (a version-fenced commit, so it may
+  race the stream safely) plus sources/snapshot.vacuum(keep_last=N)
+  periodically, exactly like any log-structured table.
 """
 
 from __future__ import annotations

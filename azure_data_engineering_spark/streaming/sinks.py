@@ -4,100 +4,25 @@ The reference's load path is batch COPY/upsert per blob folder
 (adffunction/__init__.py:117-194). The streaming twin is foreachBatch:
 each micro-batch MERGEs into the target with the same PK semantics
 (operators/upsert.merge_upsert = PGHelperFunction.py:44-67 semantics).
-On Delta/Iceberg the merge is transactional `MERGE INTO`; on plain
-parquet the merged result is written DISTRIBUTED to a temp directory
-and committed with an atomic rename swap — the target never
-round-trips through driver memory, so the sink scales to targets far
-beyond driver heap (the reference's staging-table-then-commit shape,
-PGHelperFunction.py:74-77, re-expressed for a filesystem).
 
-Commit protocol (local/HDFS-style rename-capable filesystems):
-  1. write merged → `{target}.__tmp_epoch_{id}`   (distributed)
-  2. rename target → `{target}.__old_epoch_{id}`  (atomic)
-  3. rename tmp → target                          (atomic)
-  4. delete old
-A crash between 2 and 3 leaves no target but an `__old_epoch_*`
-directory; `_recover_target` rolls that back on the next batch. On
-object stores without atomic rename you'd swap a current-pointer
-manifest instead; on Delta/Iceberg none of this is needed.
+One commit protocol: every file-backed sink writes to a snapshot table
+(sources/snapshot.py), so each micro-batch is ONE version-fenced
+commit — the merged result is staged distributed (the target never
+round-trips through driver memory) and made visible by a single
+pointer rename, the reference's staging-table-then-commit shape
+(PGHelperFunction.py:74-77) re-expressed for a filesystem. Readers
+flip between consistent versions at batch boundaries, a crashed batch
+leaves the previous version current for the checkpoint to replay, and
+a concurrent writer on the same table (say `snapshot_compact`) costs a
+rebase, never a lost commit. The relational sink runs the staged
+server-side MERGE instead (sources/jdbc.jdbc_upsert).
 """
 
 from __future__ import annotations
 
-import glob
-import os
-import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
-
-from azure_data_engineering_spark.operators.upsert import default_dedup_order, merge_upsert
-
-
-def _recover_target(target_path: str) -> None:
-    """Roll back an interrupted swap: if the target vanished mid-commit,
-    restore the newest `__old_epoch_*` backup; then clear leftovers."""
-    olds = sorted(glob.glob(glob.escape(target_path) + ".__old_epoch_*"))
-    if olds and not os.path.exists(target_path):
-        os.rename(olds.pop(), target_path)
-    for stale in olds:
-        shutil.rmtree(stale, ignore_errors=True)
-    for stale in glob.glob(glob.escape(target_path) + ".__tmp_epoch_*"):
-        shutil.rmtree(stale, ignore_errors=True)
-
-
-def _atomic_swap(target_path: str, tmp_path: str, batch_id: int) -> None:
-    old = f"{target_path}.__old_epoch_{batch_id}"
-    if os.path.exists(target_path):
-        os.rename(target_path, old)
-    os.rename(tmp_path, target_path)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def stream_upsert_to_parquet(
-    stream: DataFrame,
-    target_path: str,
-    pk: Sequence[str],
-    dedup_order: Sequence | None = None,
-    query_name: str = "stream_upsert",
-    checkpoint: str | None = None,
-):
-    """Run a streaming query that MERGEs every micro-batch into the
-    parquet table at target_path (update-matched / insert-unmatched /
-    batch deduped on PK). Returns the StreamingQuery; caller awaits.
-
-    dedup_order: total order deciding which in-batch duplicate wins per
-    PK. Default: descending struct over the non-PK payload columns — a
-    real total order (ordering by the PK itself would be a no-op on
-    rows that share that PK)."""
-    spark = stream.sparkSession
-
-    def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_target(target_path)
-        order = (
-            list(dedup_order)
-            if dedup_order is not None
-            else default_dedup_order(batch_df.columns, pk)
-        )
-        if os.path.exists(target_path):
-            target = spark.read.parquet(target_path)
-            merged = merge_upsert(target, batch_df.select(*target.columns), pk, dedup_order=order)
-        else:
-            from azure_data_engineering_spark.operators.relational import dedup_keep_first
-
-            merged = dedup_keep_first(batch_df, pk, order)
-        # Distributed write to a temp dir (materializes the merge before
-        # the files it read are touched), then atomic rename swap.
-        tmp = f"{target_path}.__tmp_epoch_{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        _atomic_swap(target_path, tmp, batch_id)
-
-    writer = stream.writeStream.foreachBatch(upsert_batch).queryName(query_name)
-    if checkpoint:
-        # durable progress log: a restarted query resumes from the
-        # first unprocessed micro-batch instead of re-ingesting
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.trigger(availableNow=True).start()
 
 
 def stream_upsert_to_snapshot(
@@ -112,14 +37,15 @@ def stream_upsert_to_snapshot(
     (sources/snapshot.py): each micro-batch becomes ONE atomic
     snapshot_merge commit, so readers flip between consistent table
     versions at batch boundaries and every pre-batch state stays
-    time-travelable. This is the object-store-safe variant of
-    stream_upsert_to_parquet — the commit point is a single pointer
-    rename, not a directory swap — and the closest filesystem analogue
-    of MERGE-per-batch on Delta/Iceberg. Commits are version-fenced
-    (every snapshot_merge is), so this sink can share the table with a
-    concurrent batch writer (e.g. compaction) without last-writer-wins
-    dropping a commit — a lost race rebases on the winner's snapshot
-    and retries."""
+    time-travelable — the closest filesystem analogue of
+    MERGE-per-batch on Delta/Iceberg. Commits are version-fenced (every
+    snapshot_merge is), so this sink can share the table with a
+    concurrent batch writer (e.g. snapshot_compact) without
+    last-writer-wins dropping a commit — a lost race rebases on the
+    winner's snapshot and retries.
+
+    dedup_order: total order deciding which in-batch duplicate wins per
+    PK. Default: descending struct over the non-PK payload columns."""
     from azure_data_engineering_spark.sources.snapshot import snapshot_merge
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:

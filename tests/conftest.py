@@ -38,3 +38,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture()
+def backdate_past_grace():
+    """Age the snapshot-table commit directories holding `files` past
+    vacuum's orphan grace period, as if their writer died long ago."""
+    import time
+
+    from azure_data_engineering_spark.sources.snapshot import _ORPHAN_GRACE_S
+
+    def backdate(table, files):
+        old = time.time() - _ORPHAN_GRACE_S - 60
+        for d in {os.path.dirname(os.path.join(table, f)) for f in files}:
+            for e in os.scandir(d):
+                os.utime(e.path, (old, old))
+            os.utime(d, (old, old))
+
+    return backdate

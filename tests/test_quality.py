@@ -4,8 +4,6 @@ index, jsonl round-trip, small-file compaction."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from azure_data_engineering_spark.functions.pii import has_pii, pii_counts, redact_pii
@@ -17,8 +15,12 @@ from azure_data_engineering_spark.operators.quality import (
 )
 from azure_data_engineering_spark.operators.sampling import cap_per_group, global_sorted_index
 from azure_data_engineering_spark.operators.tfidf import top_terms_per_doc, tfidf
-from azure_data_engineering_spark.sources.compaction import compact_parquet, recover_compaction
 from azure_data_engineering_spark.sources.jsonl import read_jsonl, write_jsonl
+from azure_data_engineering_spark.sources.snapshot import (
+    snapshot_compact,
+    snapshot_read,
+    snapshot_write,
+)
 
 
 class TestPii:
@@ -188,22 +190,25 @@ class TestJsonl:
 
 class TestCompaction:
     def test_compacts_many_small_files(self, spark, tmp_path):
-        p = str(tmp_path / "tbl")
-        spark.range(10_000).repartition(40).write.parquet(p)
-        before = len(spark.read.parquet(p).inputFiles())
+        t = str(tmp_path / "tbl")
+        snapshot_write(spark.range(10_000).repartition(40), t)
+        before = len(snapshot_read(spark, t).inputFiles())
         assert before >= 40
-        after = compact_parquet(spark, p, target_bytes=10 * 1024 * 1024)
-        assert after < before
-        assert spark.read.parquet(p).count() == 10_000
-        assert not os.path.exists(p + ".__compact_tmp")
-        assert not os.path.exists(p + ".__compact_old")
+        v = snapshot_compact(spark, t, target_bytes=10 * 1024 * 1024)
+        assert v == 2
+        assert len(snapshot_read(spark, t).inputFiles()) < before
+        assert snapshot_read(spark, t).count() == 10_000
 
     def test_sorted_compaction_clusters(self, spark, tmp_path):
-        p = str(tmp_path / "tbl2")
-        spark.range(5_000).select(F.col("id"), (F.col("id") % 97).alias("key")).repartition(20).write.parquet(p)
-        compact_parquet(spark, p, target_bytes=8 * 1024, sort_cols=["key"])
-        df = spark.read.parquet(p)
+        t = str(tmp_path / "tbl2")
+        snapshot_write(
+            spark.range(5_000).select(F.col("id"), (F.col("id") % 97).alias("key")).repartition(20),
+            t,
+        )
+        snapshot_compact(spark, t, target_bytes=8 * 1024, sort_cols=["key"])
+        df = snapshot_read(spark, t)
         assert df.count() == 5_000
+        assert len(df.inputFiles()) < 20
         # clustered: each file's key range should be narrow vs global range
         files = df.select(F.input_file_name().alias("f"), "key").groupBy("f").agg(
             (F.max("key") - F.min("key")).alias("spread")
@@ -212,12 +217,17 @@ class TestCompaction:
         assert len(spreads) > 1
         assert sum(spreads) / len(spreads) < 96  # strictly narrower than unclustered
 
-    def test_recover_restores_backup(self, spark, tmp_path):
-        p = str(tmp_path / "tbl3")
-        spark.range(100).write.parquet(p)
-        os.rename(p, p + ".__compact_old")  # simulate crash after target rename
-        recover_compaction(p)
-        assert spark.read.parquet(p).count() == 100
+    def test_pre_compaction_version_time_travels(self, spark, tmp_path):
+        t = str(tmp_path / "tbl3")
+        v1 = snapshot_write(spark.range(100).repartition(10), t)
+        snapshot_compact(spark, t)
+
+        def ids(version=None):
+            return sorted(r.id for r in snapshot_read(spark, t, version=version).collect())
+
+        assert ids(v1) == ids() == list(range(100))
+        assert len(snapshot_read(spark, t, version=v1).inputFiles()) == 10
+        assert len(snapshot_read(spark, t).inputFiles()) == 1
 
 
 class TestLineDedup:

@@ -96,14 +96,28 @@ class TestCrashAndVacuum:
         got = {(r.k, r.v) for r in sn.snapshot_read(spark, table).collect()}
         assert got == {(2, "b")}
 
-    def test_vacuum_removes_crash_orphans(self, spark, table):
+    def test_vacuum_removes_crash_orphans(self, spark, table, backdate_past_grace):
         sn.snapshot_write(_df(spark, [(1, "a")]), table)
         orphans = sn._stage_data(_df(spark, [(9, "z")]), table)  # no manifest, no pointer
         assert orphans
+        backdate_past_grace(table, orphans)
         removed = sn.vacuum(table, keep_last=1)
         assert removed == len(orphans)
         got = {(r.k, r.v) for r in sn.snapshot_read(spark, table).collect()}
         assert got == {(1, "a")}
+
+    def test_vacuum_spares_a_fresh_stage(self, spark, table):
+        """A writer that has staged but not yet claimed its slot is
+        indistinguishable from a crash orphan until the grace period
+        passes: vacuum in between must leave its files, so the commit
+        that follows is readable."""
+        sn.snapshot_write(_df(spark, [(1, "a")]), table)
+        files = sn._stage_data(_df(spark, [(2, "b")]), table)
+        assert sn.vacuum(table, keep_last=1) == 0
+        assert all(os.path.exists(os.path.join(table, f)) for f in files)
+        assert sn._commit(table, 1, files) == 2
+        got = {(r.k, r.v) for r in sn.snapshot_read(spark, table).collect()}
+        assert got == {(2, "b")}
 
     def test_vacuum_keep_last_counts_only_committed_versions(self, spark, table):
         """A dead claim above the pointer is not a version to keep: with

@@ -56,7 +56,7 @@ class TestCasCommit:
         assert sn.current_version(table) == 1
         assert _rows(spark, table) == {(1, "a")}
 
-    def test_interleaved_writers_exactly_one_wins(self, spark, table):
+    def test_interleaved_writers_exactly_one_wins(self, spark, table, backdate_past_grace):
         """Two writers race for the same slot: both stage their data
         against version 1, the slot's O_EXCL create admits exactly one,
         and the loser's files never become visible."""
@@ -72,6 +72,8 @@ class TestCasCommit:
         assert sn.current_version(table) == 2
         assert _rows(spark, table) == {(1, "a"), (2, "w1")}
         # the loser's staged files are invisible orphans vacuum removes
+        # once they are older than the grace period
+        backdate_past_grace(table, files_w2)
         removed = sn.vacuum(table, keep_last=2)
         assert removed >= 1
         assert _rows(spark, table) == {(1, "a"), (2, "w1")}
@@ -123,6 +125,30 @@ class TestCasCommit:
         monkeypatch.setattr(sn, "_commit", real_commit)
         assert v == 3
         assert _rows(spark, table) == {(1, "a9"), (4, "d")}
+
+    def test_merge_during_compaction_is_not_lost(self, spark, table, monkeypatch):
+        """A merge commits while snapshot_compact stages its rewrite of
+        v1: the compaction's fence is stale, so it rebuilds against the
+        merge's v2 and lands v3 with the merge's update in it."""
+        sn.snapshot_write(_df(spark, [(i, "a") for i in range(40)]).repartition(8), table)
+        real_stage = sn._stage_data
+        state = {"raced": False}
+
+        def racing_stage(df, t):
+            files = real_stage(df, t)
+            if not state["raced"]:
+                state["raced"] = True
+                sn.snapshot_merge(_df(spark, [(1, "a2"), (99, "new")]), t, ["k"])
+            return files
+
+        monkeypatch.setattr(sn, "_stage_data", racing_stage)
+        v = sn.snapshot_compact(spark, table)
+        monkeypatch.setattr(sn, "_stage_data", real_stage)
+        assert state["raced"]
+        assert v == 3
+        expected = {(i, "a") for i in range(40) if i != 1} | {(1, "a2"), (99, "new")}
+        assert _rows(spark, table) == expected
+        assert len(sn._read_manifest(table, 3)) < len(sn._read_manifest(table, 1))
 
     def test_retries_exhausted_raises(self, spark, table, monkeypatch):
         sn.snapshot_write(_df(spark, [(1, "a")]), table)

@@ -1,5 +1,5 @@
 """CDC-style streaming upsert sink: per-micro-batch MERGE into a
-parquet target (foreachBatch)."""
+snapshot table (foreachBatch, one commit per batch)."""
 
 from __future__ import annotations
 
@@ -7,7 +7,8 @@ import time
 
 import pandas as pd
 
-from azure_data_engineering_spark.streaming.sinks import stream_upsert_to_parquet
+from azure_data_engineering_spark.sources.snapshot import snapshot_read
+from azure_data_engineering_spark.streaming.sinks import stream_upsert_to_snapshot
 
 
 def test_two_batches_merge_into_target(spark, tmp_path):
@@ -26,12 +27,12 @@ def test_two_batches_merge_into_target(spark, tmp_path):
 
     schema = spark.read.parquet(str(src)).schema
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(str(src))
-    q = stream_upsert_to_parquet(
+    q = stream_upsert_to_snapshot(
         stream, target, pk=["k"], dedup_order=[F.col("version").desc()]
     )
     q.awaitTermination()
 
-    final = {r["k"]: (r["v"], r["version"]) for r in spark.read.parquet(target).collect()}
+    final = {r["k"]: (r["v"], r["version"]) for r in snapshot_read(spark, target).collect()}
     assert final == {1: ("a", 1), 2: ("B", 2), 3: ("c_new", 2)}
 
 
@@ -55,33 +56,12 @@ def test_sink_never_collects_to_driver(spark, tmp_path, monkeypatch):
 
     schema = spark.read.schema("k long, v long").parquet(str(src)).schema
     stream = spark.readStream.schema(schema).parquet(str(src))
-    q = stream_upsert_to_parquet(stream, target, pk=["k"])
+    q = stream_upsert_to_snapshot(stream, target, pk=["k"])
     q.awaitTermination()
     monkeypatch.undo()
     # default dedup_order = desc struct over payload → v=21 wins for k=2
-    final = {r["k"]: r["v"] for r in spark.read.parquet(target).collect()}
+    final = {r["k"]: r["v"] for r in snapshot_read(spark, target).collect()}
     assert final == {1: 10, 2: 21}
-
-
-def test_sink_recovers_interrupted_swap(spark, tmp_path):
-    """Crash between 'rename target→old' and 'rename tmp→target' leaves
-    only an __old_epoch_* dir; the next batch must roll it back before
-    merging so no committed data is lost."""
-    import os
-
-    from azure_data_engineering_spark.streaming.sinks import _recover_target
-
-    target = str(tmp_path / "rec_target")
-    pd.DataFrame({"k": [7], "v": [70]}).to_parquet(tmp_path / "seed.parquet")
-    spark.read.parquet(str(tmp_path / "seed.parquet")).write.parquet(target)
-    # simulate the crash window: target renamed away, tmp left behind
-    os.rename(target, target + ".__old_epoch_3")
-    os.makedirs(target + ".__tmp_epoch_3")
-    _recover_target(target)
-    assert os.path.exists(target)
-    assert not os.path.exists(target + ".__old_epoch_3")
-    assert not os.path.exists(target + ".__tmp_epoch_3")
-    assert [r["k"] for r in spark.read.parquet(target).collect()] == [7]
 
 
 def test_char_shingles(spark):
