@@ -2,8 +2,8 @@ from azure_data_engineering_spark.sources.csv_pipe import read_pipe_csv, write_p
 from azure_data_engineering_spark.sources.listing import list_files
 from azure_data_engineering_spark.sources.excel import ingest_excel
 from azure_data_engineering_spark.sources.multimodal import with_binary_payload, decode_metadata
-from azure_data_engineering_spark.sources.layout import cluster_write, scan_clustered
 from azure_data_engineering_spark.sources.snapshot import (
+    snapshot_compact,
     snapshot_merge,
     snapshot_read,
     snapshot_write,
@@ -17,10 +17,9 @@ __all__ = [
     "ingest_excel",
     "with_binary_payload",
     "decode_metadata",
-    "cluster_write",
-    "scan_clustered",
     "snapshot_write",
     "snapshot_read",
     "snapshot_merge",
+    "snapshot_compact",
     "vacuum",
 ]

@@ -1,68 +1,36 @@
-"""Sorted write layout for data-skipping parquet scans.
+"""Sorted and Z-ordered layouts for data-skipping parquet scans.
 
 At 100 TB the cheapest predicate is the one that never reads a row
 group: parquet stores min/max statistics per row group, and a scan
 whose pushed filter falls outside a group's range skips it entirely.
 That only pays off if values are clustered — a randomly-laid-out
 table has every row group spanning the full value range, so nothing
-skips. ``cluster_write`` produces the layout that makes skipping
-real:
+skips.
 
-- ``repartitionByRange(cluster_by)`` range-partitions rows so each
-  output *file* covers a narrow, disjoint slice of the key space
-  (Spark samples the keys to build balanced range bounds — skew-safe
-  without manual histograms);
-- ``sortWithinPartitions(cluster_by)`` orders rows inside each file
-  so each *row group* within a file covers an even narrower slice.
-
-This is the "CLUSTER BY" / linear-Z-order-lite discipline used by
-lakehouse table formats; it needs exactly one shuffle at write time
-and repays it on every subsequent filtered scan. For multi-column
-clustering the leading column dominates (lexicographic order), so put
-the most-filtered column first.
+A layout is a ``snapshot_compact`` commit (sources/snapshot.py), as
+``OPTIMIZE … ZORDER BY`` is one more log commit in Delta Lake: write
+the table with ``snapshot_write``, then compact it with ``sort_cols``,
+which range-partitions rows so each file covers a narrow, disjoint
+slice of the key space and sorts within each file so each row group
+covers a narrower one. ``sort_cols=["lang", "doc_id"]`` is a linear
+(lexicographic) clustering, where the leading column dominates;
+``sort_cols=[z_value("doc_id", "n_chars")]`` is a Z-order clustering
+that keeps both columns local. The Morton key is an expression, not a
+column, so the compacted table keeps exactly its input columns.
 
 Reference parity: the reference always appends unclustered
 (adffunction/__init__.py:180 writes straight from the staging frame);
-this module is the write-side optimization Spark makes available.
+this is the write-side optimization Spark makes available.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
-
-
-def cluster_write(
-    df: DataFrame,
-    path: str,
-    cluster_by: list[str],
-    n_files: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` to parquet range-clustered and sorted on
-    ``cluster_by``. ``n_files`` overrides the output file count
-    (default: current shuffle parallelism)."""
-    if not cluster_by:
-        raise ValueError("cluster_by must name at least one column")
-    cols = [df[c] for c in cluster_by]
-    if n_files is not None:
-        ranged = df.repartitionByRange(n_files, *cols)
-    else:
-        ranged = df.repartitionByRange(*cols)
-    ranged.sortWithinPartitions(*cols).write.mode(mode).parquet(path)
-
-
-def scan_clustered(spark: SparkSession, path: str) -> DataFrame:
-    """Read a clustered table. Plain parquet read — the payoff is that
-    pushed filters on the cluster keys now skip whole row groups."""
-    return spark.read.parquet(path)
 
 
 def z_value(x, y, bits: int = 16):
     """Morton (Z-order) interleave of the low ``bits`` bits of two
     non-negative integer columns, as a pure codegen expression — a
-    chain of shift/mask/or terms, no UDF. Linear clustering (the
-    lexicographic sort ``cluster_write`` does) only skips on the
-    leading column; the Z-curve keeps BOTH dimensions locality-
+    chain of shift/mask/or terms, no UDF. A linear sort only skips on
+    the leading column; the Z-curve keeps BOTH dimensions locality-
     preserving, so a range filter on either column (or a box on both)
     maps to a bounded set of z-ranges and still skips row groups."""
     from pyspark.sql import functions as F
@@ -76,23 +44,3 @@ def z_value(x, y, bits: int = 16):
             .bitwiseOR(F.shiftleft(F.shiftright(yc.cast("long"), i).bitwiseAND(F.lit(1)), 2 * i))
         )
     return z
-
-
-def z_order_write(
-    df: DataFrame,
-    path: str,
-    cols: tuple[str, str],
-    bits: int = 16,
-    n_files: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` parquet Z-ordered on two integer columns: range-
-    partition and sort by the Morton key, then drop it — the layout is
-    the artifact, not the key. One shuffle, same as cluster_write."""
-    zk = "__zval"
-    with_z = df.withColumn(zk, z_value(cols[0], cols[1], bits))
-    if n_files is not None:
-        ranged = with_z.repartitionByRange(n_files, zk)
-    else:
-        ranged = with_z.repartitionByRange(zk)
-    ranged.sortWithinPartitions(zk).drop(zk).write.mode(mode).parquet(path)

@@ -54,6 +54,7 @@ retry carrying the same `claim_tag` reclaims it, or a writer passing
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import json
 import math
@@ -64,7 +65,7 @@ import tempfile
 import time as _time
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from azure_data_engineering_spark.operators.upsert import (
@@ -440,14 +441,20 @@ def snapshot_compact(
     spark: SparkSession,
     table: str,
     target_bytes: int = 128 * 1024 * 1024,
-    sort_cols: Sequence[str] | None = None,
+    sort_cols: Sequence[str | Column] | None = None,
 ) -> int:
     """Rewrite the current snapshot into files of ~target_bytes as the
     next version; returns it. The file count is ceil(bytes the current
     manifest names / target_bytes), at least 1: coalesce() when
     shrinking (no shuffle, the usual case), repartition() when growing.
-    sort_cols range-partitions and sorts within files, so min/max footer
-    stats prune single-column predicates. A commit that lands while the
+    sort_cols lays the table out for data skipping: it range-partitions
+    rows so each file covers a disjoint key range and sorts within
+    files, so min/max footer stats prune predicates on the keys. Names
+    give a linear clustering (the leading column dominates); a Column
+    expression such as sources/layout.z_value("x", "y") gives a Z-order
+    one that keeps both columns local, without adding a column to the
+    table. This is the only table layout writer, as OPTIMIZE … ZORDER BY
+    is one more log commit in Delta. A commit that lands while the
     rewrite stages forces a rebuild against it; the pre-compaction
     version stays readable until vacuum expires it."""
 
@@ -538,7 +545,8 @@ def vacuum(table: str, keep_last: int = 1) -> int:
     count toward `keep_last`, so the current one is always kept; claims
     above the pointer (a live writer mid-commit, or a dead slot awaiting
     release_orphan_slot) are left alone together with the files they
-    name. A file no manifest names — a crashed or losing commit's, or
+    name. A manifest a concurrent vacuum removed first counts as
+    already expired. A file no manifest names — a crashed or losing commit's, or
     one a writer is still staging — goes only once the newest mtime in
     its commit directory is older than `_ORPHAN_GRACE_S`. Returns the
     number of data files deleted."""
@@ -548,11 +556,13 @@ def vacuum(table: str, keep_last: int = 1) -> int:
     committed = [v for v in snapshot_versions(table) if v <= cur]
     expired: set[str] = set()
     for v in committed[:-keep_last]:
-        expired.update(_read_manifest(table, v))
-        os.remove(os.path.join(_manifest_dir(table), f"v{v}.json"))
+        with contextlib.suppress(FileNotFoundError):  # another vacuum expired it
+            expired.update(_read_manifest(table, v))
+            os.remove(os.path.join(_manifest_dir(table), f"v{v}.json"))
     referenced: set[str] = set()
     for v in snapshot_versions(table):
-        referenced.update(_read_manifest(table, v))
+        with contextlib.suppress(FileNotFoundError):
+            referenced.update(_read_manifest(table, v))
     removed = 0
     horizon = _time.time() - _ORPHAN_GRACE_S
     for d in glob.glob(os.path.join(glob.escape(os.path.join(table, "data")), "commit-*")):

@@ -16,8 +16,7 @@ Store layout: (id, band, band_hash) — signatures EXPLODED to one row
 per band. The history probe is then a plain equi-join on
 (band, band_hash): no array ops, broadcast-able when the batch is
 small, and at 100 TB the store is just a big parquet table the join
-shuffles on its bucket key (optionally bucketed-by band_hash for a
-shuffle-free probe). Candidate semantics inherit the LSH S-curve of
+shuffles on its bucket key. Candidate semantics inherit the LSH S-curve of
 minhash_lsh_candidates (num_hashes/bands): ~0.5 Jaccard threshold at
 64/16.
 

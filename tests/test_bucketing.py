@@ -1,4 +1,5 @@
-"""Bucketed-join co-location and archive-partitioning tests."""
+"""Archive-partitioning tests: date-partitioned archive writes and
+partition pruning on read."""
 
 from __future__ import annotations
 
@@ -7,54 +8,7 @@ import os
 from pyspark.sql import functions as F
 
 from azure_data_engineering_spark.catalog import load_table
-from azure_data_engineering_spark.plans.inspect import formatted_plan
 from azure_data_engineering_spark.sources.archive import archive_prune, archive_write
-from azure_data_engineering_spark.sources.bucketing import bucketed_join, write_bucketed
-
-
-import pytest
-
-
-@pytest.fixture()
-def no_broadcast(spark):
-    """At test scale everything broadcasts; force shuffle-family joins
-    so the co-location property is observable (at 100 TB neither side
-    broadcasts anyway)."""
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    yield
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-class TestBucketedJoin:
-    def test_no_exchange_between_bucketed_tables(self, spark, sf_dir, no_broadcast):
-        o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
-        l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-        write_bucketed(o, "b_orders", 4, ["o_orderkey"], ["o_orderkey"])
-        write_bucketed(
-            l.withColumnRenamed("l_orderkey", "o_orderkey"), "b_lineitem", 4, ["o_orderkey"], ["o_orderkey"]
-        )
-        joined = bucketed_join(spark, "b_orders", "b_lineitem", ["o_orderkey"])
-        plan = formatted_plan(joined)
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-        # co-located: bucketed scans satisfy the join distribution -> no shuffle
-        assert "Exchange" not in plan, plan
-        # and the result is right
-        expected = (
-            load_table(spark, sf_dir, "lineitem")
-            .join(load_table(spark, sf_dir, "orders"), F.col("l_orderkey") == F.col("o_orderkey"))
-            .count()
-        )
-        assert joined.count() == expected
-
-    def test_bucketed_agg_skips_shuffle(self, spark, sf_dir, no_broadcast):
-        out = (
-            bucketed_join(spark, "b_orders", "b_lineitem", ["o_orderkey"])
-            .groupBy("o_orderkey")
-            .agg(F.sum("l_quantity").alias("q"))
-        )
-        # grouping on the bucket key reuses the at-rest partitioning too
-        assert "Exchange" not in formatted_plan(out)
 
 
 class TestArchive:

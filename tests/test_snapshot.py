@@ -137,6 +137,32 @@ class TestCrashAndVacuum:
         sn.release_orphan_slot(table, 3)
         assert sn.snapshot_versions(table) == [1, 2]
 
+    def test_concurrent_vacuum_skips_manifests_already_expired(self, spark, table, monkeypatch):
+        """A second vacuum runs between the first one's manifest listing
+        and its reads, and expires v1 and v2 first. The first vacuum
+        must treat the vanished manifests as already expired instead of
+        failing, and the table must still read its current rows."""
+        for k in range(4):
+            sn.snapshot_write(_df(spark, [(k, "x")]), table)  # overwrite
+        listed = sn.snapshot_versions
+        raced = {}
+
+        def list_then_race(t):
+            versions = listed(t)
+            if not raced:
+                raced["removed"] = None  # the racing vacuum lists unpatched
+                raced["removed"] = sn.vacuum(table, keep_last=2)
+            return versions
+
+        monkeypatch.setattr(sn, "snapshot_versions", list_then_race)
+        sn.vacuum(table, keep_last=2)
+        assert raced["removed"] >= 2  # the racing vacuum removed v1's and v2's files
+        assert listed(table) == [3, 4]
+        got = {(r.k, r.v) for r in sn.snapshot_read(spark, table).collect()}
+        assert got == {(3, "x")}
+        v3 = {(r.k, r.v) for r in sn.snapshot_read(spark, table, version=3).collect()}
+        assert v3 == {(2, "x")}
+
 
 class TestStreamingSink:
     def test_stream_merges_each_batch_as_one_commit(self, spark, table, tmp_path):

@@ -224,24 +224,40 @@ class TestMultimodal:
         assert r["features"] == [2 / 5, 1 / 5, 2 / 5]  # vowels, spaces, digits
 
 
+def _compacted(spark, df, n_files, sort_cols):
+    """Commit df as a snapshot table and lay it out with
+    snapshot_compact, choosing target_bytes from the bytes the v1
+    manifest names so that `n_files` files are planned; returns the
+    compacted snapshot."""
+    import math
+    import tempfile
+
+    from azure_data_engineering_spark.sources import snapshot as sn
+
+    table = tempfile.mkdtemp(prefix="layout_") + "/docs"
+    sn.snapshot_write(df, table)
+    size = sum(os.path.getsize(os.path.join(table, f)) for f in sn._read_manifest(table, 1))
+    assert sn.snapshot_compact(
+        spark, table, target_bytes=math.ceil(size / n_files), sort_cols=sort_cols
+    ) == 2
+    return sn.snapshot_read(spark, table)
+
+
 class TestClusterWrite:
     def test_files_cover_disjoint_key_ranges(self, spark, sf_dir):
-        """The point of cluster_write: each output file owns a narrow,
-        non-overlapping slice of the cluster-key space, so parquet
-        min/max stats can skip everything outside a filter's range.
-        Assert pairwise disjointness of per-file (lang, doc_id) ranges."""
-        import glob
-        import tempfile
-
+        """The point of a clustered layout: each file of the compacted
+        snapshot owns a narrow, non-overlapping slice of the cluster-key
+        space, so parquet min/max stats can skip everything outside a
+        filter's range. Assert pairwise disjointness of per-file
+        (lang, doc_id) ranges."""
         from azure_data_engineering_spark.catalog import load_table
-        from azure_data_engineering_spark.sources.layout import cluster_write
 
         d = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-        path = tempfile.mkdtemp(prefix="layout_") + "/docs"
-        cluster_write(d, path, ["lang", "doc_id"], n_files=6)
+        back = _compacted(spark, d, 6, ["lang", "doc_id"])
+        assert back.columns == d.columns
 
         ranges = []
-        for f in glob.glob(path + "/part-*.parquet"):
+        for f in back.inputFiles():
             part = spark.read.parquet(f)
             row = part.selectExpr(
                 "min(struct(lang, doc_id)) AS lo", "max(struct(lang, doc_id)) AS hi"
@@ -255,13 +271,10 @@ class TestClusterWrite:
 
     def test_clustered_values_identical(self, spark, sf_dir):
         from azure_data_engineering_spark.catalog import load_table
-        from azure_data_engineering_spark.sources.layout import cluster_write, scan_clustered
-        import tempfile
 
         d = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-        path = tempfile.mkdtemp(prefix="layout_eq_") + "/docs"
-        cluster_write(d, path, ["doc_id"])
-        back = scan_clustered(spark, path)
+        back = _compacted(spark, d, 8, ["doc_id"])
+        assert back.columns == d.columns
         assert back.count() == d.count()
         assert back.exceptAll(d).count() == 0
 
@@ -289,19 +302,16 @@ class TestZOrder:
         dimensions — the whole point vs linear sort, where the
         trailing column spans its full range in every file. Assert the
         mean per-file n_chars span is well below the global span."""
-        import glob
-        import tempfile
-
         from azure_data_engineering_spark.catalog import load_table
-        from azure_data_engineering_spark.sources.layout import z_order_write
+        from azure_data_engineering_spark.sources.layout import z_value
 
         d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
         glob_span = d.selectExpr("max(n_chars) - min(n_chars) AS s").collect()[0]["s"]
-        path = tempfile.mkdtemp(prefix="zorder_loc_") + "/docs"
-        z_order_write(d, path, ("doc_id", "n_chars"), n_files=8)
+        back = _compacted(spark, d, 8, [z_value("doc_id", "n_chars")])
+        assert back.columns == d.columns
 
         spans = []
-        for f in glob.glob(path + "/part-*.parquet"):
+        for f in back.inputFiles():
             r = spark.read.parquet(f).selectExpr(
                 "max(n_chars) - min(n_chars) AS s", "count(*) AS n"
             ).collect()[0]
