@@ -19,14 +19,12 @@ from pyspark.sql import functions as F
 
 
 def sanitize_cell(col: Column) -> Column:
-    """The reference's exact 6-step destructive sanitize chain."""
-    c = F.regexp_replace(col, ",", "")
-    c = F.regexp_replace(c, "'", "")
-    c = F.regexp_replace(c, "\n", " ")
-    c = F.regexp_replace(c, r"\\", " ")
-    c = F.regexp_replace(c, "/", "-")
-    c = F.regexp_replace(c, "[^\\x00-\\x7F]", "")  # ascii-ignore
-    return c
+    """The reference's exact 6-step destructive sanitize chain. Steps
+    1-5 map five distinct ASCII characters, none of which another step
+    produces, so one `translate` does them all (a character past the
+    end of the replacement string is deleted); step 6 stays a regex."""
+    c = F.translate(col, "\n\\/,'", "  -")
+    return F.regexp_replace(c, "[^\\x00-\\x7F]", "")  # ascii-ignore
 
 
 def ascii_strip(col: Column) -> Column:

@@ -67,9 +67,11 @@ def merge_upsert(
             f"schema mismatch: target={target.columns} source={source.columns}"
         )
     source = source.select(*target.columns)  # align column order
+    # dedup keeps one row per key, so the raw source names the same keys;
+    # anti-joining on them plans the dedup window once, not per branch
+    keep_from_target = target.join(source.select(*pk), on=list(pk), how="left_anti")
     if dedup_order is not None:
         source = dedup_keep_first(source, pk, dedup_order)
-    keep_from_target = target.join(source, on=list(pk), how="left_anti")
     return source.unionByName(keep_from_target)
 
 
@@ -93,6 +95,9 @@ def apply_cdc(
     on the PK, no driver round-trip."""
     ops = {"I", "U", "D"}
     payload_cols = [c for c in changes.columns if c != op_col]
+    # deleted OR replaced keys leave target: every key in the batch,
+    # taken before the dedup (same key set) as in merge_upsert
+    touched = changes.select(*pk)
     if dedup_order is not None:
         changes = dedup_keep_first(changes, pk, dedup_order)
     changes = changes.withColumn(
@@ -102,6 +107,5 @@ def apply_cdc(
         ),
     )
     upserts = changes.filter(F.col(op_col) != "D").select(*payload_cols)
-    touched = changes.select(*pk)  # deleted OR replaced keys leave target
     keep_from_target = target.join(touched, on=list(pk), how="left_anti")
     return upserts.select(*target.columns).unionByName(keep_from_target)

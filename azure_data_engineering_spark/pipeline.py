@@ -13,6 +13,11 @@ Each returns the reference's result contract — status, elapsed
 seconds, counts (cf. `"success. Time Taken- {t2-t1}."`,
 adffunction/__init__.py:106-113) — as a structured dict instead of a
 substring-matched string.
+
+run_sql is the one step that returns before its work is done: a
+query's result is a lazy DataFrame that the caller's action runs once,
+so its runtime errors raise at that action and the step's seconds
+cover parse and analysis only.
 """
 
 from __future__ import annotations
@@ -165,11 +170,18 @@ def maintain(
 def run_sql(spark: SparkSession, sql: str) -> StepResult:
     """step=callstoredproc: the reference delegates arbitrary relational
     SQL to Postgres (__init__.py:216); our engine owns that surface —
-    full Spark SQL over the registered views."""
+    full Spark SQL over the registered views.
+
+    detail["result"] is the analyzed DataFrame. A query's result is
+    lazy: nothing runs until the caller's action, which runs it once,
+    and a runtime error raises at that action. Parse and analysis
+    errors (bad syntax, unknown tables or columns) come back as
+    status="error", and `seconds` covers parse and analysis only.
+    Commands (DDL, DML, SET) run inside `spark.sql` itself, so their
+    work and errors land in this step."""
 
     def run() -> dict[str, Any]:
-        df = spark.sql(sql)
-        return {"result": df, "rows": df.count()}
+        return {"result": spark.sql(sql)}
 
     return _timed(run)
 

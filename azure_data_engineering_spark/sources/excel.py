@@ -12,12 +12,14 @@ Spark-first design:
   executors — the driver never holds file bytes.
 
 One parser, on the driver and on every executor: the stdlib reader
-below (zipfile + ElementTree over the public OOXML package format —
-ECMA-376: xl/workbook.xml for sheet order, xl/_rels for sheet targets,
-xl/sharedStrings.xml, and shared/inline/numeric/boolean cell types),
-so a workbook ingests to the same strings wherever it is parsed (a
-boolean is "TRUE"/"FALSE", a date its stored serial). No pip dependency
-needed to ingest real .xlsx files.
+below over the public OOXML package format (ECMA-376: xl/workbook.xml
+for sheet order, xl/_rels for sheet targets, xl/sharedStrings.xml, and
+shared/inline/numeric/boolean cell types). zipfile opens the package
+and each worksheet and shared-strings part is read in a single expat
+pass that takes every cell's value as its tags stream by. A workbook
+ingests to the same strings wherever it is parsed (a boolean is
+"TRUE"/"FALSE", a date its stored serial). No pip dependency needed to
+ingest real .xlsx files.
 """
 
 from __future__ import annotations
@@ -37,8 +39,19 @@ from azure_data_engineering_spark.functions.sanitize import sanitize_cell
 # Reader handles shared strings, inline strings, numbers, booleans,
 # sparse cells (A1 references with gaps), and multi-run rich text.
 
+_A1_COL = re.compile(r"[A-Z]+")
+
+
 def _local(tag: str) -> str:
     return tag.rsplit("}", 1)[-1]
+
+
+class _LocalNames(dict):
+    """`_local` memoised per name: a part repeats a handful of tags."""
+
+    def __missing__(self, tag: str) -> str:
+        self[tag] = local = _local(tag)
+        return local
 
 
 def _col_to_idx(ref: str) -> int:
@@ -49,16 +62,128 @@ def _col_to_idx(ref: str) -> int:
     return n - 1
 
 
-def _text_of(elem) -> str:
-    """Concatenated <t> runs under an <si>/<is> (rich text safe)."""
-    return "".join(t.text or "" for t in elem.iter() if _local(t.tag) == "t")
+def _expat_pass(part: bytes, start, end, text) -> None:
+    """One streaming pass over an XML part. Element names reach the
+    handlers as `uri}local` (or bare `local`), so `_local` matches them
+    under any namespace or prefix; buffered text arrives before the next
+    start or end event."""
+    from xml.parsers import expat
+
+    p = expat.ParserCreate(namespace_separator="}")
+    p.buffer_text = True
+    p.StartElementHandler, p.EndElementHandler, p.CharacterDataHandler = start, end, text
+    p.Parse(part, True)
+
+
+def _shared_strings(part: bytes) -> list[str]:
+    """Text of every <si> under the root: all its <t> runs joined, the
+    rich-text and phonetic (<rPh>) runs included."""
+    out: list[str] = []
+    runs: list[str] = []
+    depth = 0
+    in_si = in_t = False
+    local_of = _LocalNames()
+
+    def start(name, attrs):
+        nonlocal depth, in_si, in_t
+        depth += 1
+        local = local_of[name]
+        if depth == 2:
+            in_si = local == "si"
+            runs.clear()
+        in_t = in_si and local == "t"
+
+    def end(name):
+        nonlocal depth, in_si, in_t
+        in_t = False
+        if depth == 2 and in_si:
+            out.append("".join(runs))
+            in_si = False
+        depth -= 1
+
+    def text(data):
+        if in_t:
+            runs.append(data)
+
+    _expat_pass(part, start, end, text)
+    return out
+
+
+def _sheet_rows(part: bytes, shared: list[str]) -> list[list[str]]:
+    """Rows of a worksheet part, each padded through its last cell. A
+    cell's column is its A1 reference's letters, else the number of
+    cells already seen in its row; its value is the first <v> child's
+    text (a shared-string index for t="s", TRUE/FALSE for t="b") or,
+    for t="inlineStr", every <t> under its first <is> child."""
+    rows: list[list[str]] = []
+    cells: dict[int, str] = {}
+    depth = row_depth = 0
+    in_cell = in_is = False
+    ref = ctype = None
+    v: list[str] | None = None
+    inline: list[str] | None = None
+    buf: list[str] | None = None  # receives text until the next tag
+    local_of = _LocalNames()
+
+    def start(name, attrs):
+        nonlocal depth, row_depth, in_cell, in_is, ref, ctype, v, inline, buf
+        depth += 1
+        buf = None
+        if not row_depth:
+            if local_of[name] == "row":
+                row_depth = depth
+                cells.clear()
+        elif depth == row_depth + 1:
+            if local_of[name] == "c":
+                in_cell = True
+                ref, ctype = attrs.get("r"), attrs.get("t", "n")
+                v = inline = None
+        elif in_cell:
+            local = local_of[name]
+            if depth == row_depth + 2:
+                if local == "v" and v is None:
+                    buf = v = []
+                elif local == "is" and inline is None:
+                    inline = []
+                    in_is = True
+            elif in_is and local == "t":
+                buf = inline
+
+    def end(name):
+        nonlocal depth, row_depth, in_cell, in_is, buf
+        buf = None
+        if depth == row_depth + 2:
+            in_is = False
+        elif depth == row_depth + 1 and in_cell:
+            in_cell = False
+            m = _A1_COL.match(ref) if ref else None
+            val = None if v is None else "".join(v)
+            if ctype == "s" and val is not None:
+                val = shared[int(val or "0")]
+            elif ctype == "inlineStr" and inline is not None:
+                val = "".join(inline)
+            elif ctype == "b" and val is not None:
+                val = "TRUE" if val.strip() == "1" else "FALSE"
+            cells[_col_to_idx(m.group()) if m else len(cells)] = val or ""
+        elif depth == row_depth:
+            row_depth = 0
+            rows.append([cells.get(i, "") for i in range(max(cells) + 1 if cells else 0)])
+        depth -= 1
+
+    def text(data):
+        if buf is not None:
+            buf.append(data)
+
+    _expat_pass(part, start, end, text)
+    return rows
 
 
 def parse_xlsx_bytes(payload: bytes) -> dict[str, list[list[str]]]:
     """Parse an .xlsx workbook from bytes with the stdlib only —
-    zipfile + ElementTree over the OOXML package. Returns the loader
-    contract shape: {sheet_name: rows of stringified cells}, sheets in
-    workbook order (HelperFunction.py:27's sheet iteration)."""
+    zipfile over the OOXML package, one expat pass per worksheet and
+    shared-strings part. Returns the loader contract shape:
+    {sheet_name: rows of stringified cells}, sheets in workbook order
+    (HelperFunction.py:27's sheet iteration)."""
     import zipfile
     from xml.etree import ElementTree as ET
 
@@ -67,9 +192,7 @@ def parse_xlsx_bytes(payload: bytes) -> dict[str, list[list[str]]]:
 
     shared: list[str] = []
     if "xl/sharedStrings.xml" in names:
-        for si in ET.fromstring(zf.read("xl/sharedStrings.xml")):
-            if _local(si.tag) == "si":
-                shared.append(_text_of(si))
+        shared = _shared_strings(zf.read("xl/sharedStrings.xml"))
 
     rel_map: dict[str, str] = {}
     if "xl/_rels/workbook.xml.rels" in names:
@@ -86,31 +209,7 @@ def parse_xlsx_bytes(payload: bytes) -> dict[str, list[list[str]]]:
         rid = next((v for k, v in elem.attrib.items() if _local(k) == "id"), None)
         target = rel_map.get(rid or "", f"worksheets/sheet{sheet_no}.xml")
         target = target if target.startswith("xl/") else "xl/" + target.lstrip("/")
-        rows: list[list[str]] = []
-        for row in ET.fromstring(zf.read(target)).iter():
-            if _local(row.tag) != "row":
-                continue
-            cells: dict[int, str] = {}
-            for c in row:
-                if _local(c.tag) != "c":
-                    continue
-                ref = c.get("r")
-                m = re.match(r"[A-Z]+", ref) if ref else None
-                idx = _col_to_idx(m.group()) if m else len(cells)
-                ctype = c.get("t", "n")
-                v = next((ch for ch in c if _local(ch.tag) == "v"), None)
-                is_elem = next((ch for ch in c if _local(ch.tag) == "is"), None)
-                if ctype == "s" and v is not None:
-                    cells[idx] = shared[int(v.text or "0")]
-                elif ctype == "inlineStr" and is_elem is not None:
-                    cells[idx] = _text_of(is_elem)
-                elif ctype == "b" and v is not None:
-                    cells[idx] = "TRUE" if (v.text or "").strip() == "1" else "FALSE"
-                else:  # n / str / d — take the raw stored text
-                    cells[idx] = (v.text or "") if v is not None else ""
-            width = max(cells) + 1 if cells else 0
-            rows.append([cells.get(i, "") for i in range(width)])
-        book[sheet_name] = rows
+        book[sheet_name] = _sheet_rows(zf.read(target), shared)
     return book
 
 
@@ -231,8 +330,6 @@ def ingest_excel_distributed(
     reference's CSV stage. bytes_loader(name, payload) -> {sheet:
     rows}; defaults to parse_xlsx_bytes, tests inject a fake.
     """
-    import re as _re
-
     from collections.abc import Iterator
 
     import pandas as pd
@@ -254,7 +351,7 @@ def ingest_excel_distributed(
         for pdf in batches:
             out = []
             for _, row in pdf.iterrows():
-                base = _re.sub(r"[^A-Za-z0-9]+", "", os.path.splitext(os.path.basename(row["path"]))[0])
+                base = sanitize_basename(row["path"])
                 book = bytes_loader(row["path"], row["content"])
                 for sheet in select_sheets(book.keys(), sheet_list):
                     for i, cells in enumerate(book[sheet]):

@@ -545,11 +545,12 @@ def vacuum(table: str, keep_last: int = 1) -> int:
     count toward `keep_last`, so the current one is always kept; claims
     above the pointer (a live writer mid-commit, or a dead slot awaiting
     release_orphan_slot) are left alone together with the files they
-    name. A manifest a concurrent vacuum removed first counts as
-    already expired. A file no manifest names — a crashed or losing commit's, or
-    one a writer is still staging — goes only once the newest mtime in
-    its commit directory is older than `_ORPHAN_GRACE_S`. Returns the
-    number of data files deleted."""
+    name. A manifest, data file or commit directory a concurrent vacuum
+    removed first counts as already gone. A file no manifest names — a
+    crashed or losing commit's, or one a writer is still staging — goes
+    only once the newest mtime in its commit directory is older than
+    `_ORPHAN_GRACE_S`. Returns the number of data files this call
+    deleted."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     cur = current_version(table) or 0
@@ -566,9 +567,12 @@ def vacuum(table: str, keep_last: int = 1) -> int:
     removed = 0
     horizon = _time.time() - _ORPHAN_GRACE_S
     for d in glob.glob(os.path.join(glob.escape(os.path.join(table, "data")), "commit-*")):
-        stale = max(
-            [os.path.getmtime(d)] + [os.path.getmtime(e.path) for e in os.scandir(d)]
-        ) < horizon
+        try:
+            stale = max(
+                [os.path.getmtime(d)] + [os.path.getmtime(e.path) for e in os.scandir(d)]
+            ) < horizon
+        except FileNotFoundError:  # a concurrent vacuum is removing this dir
+            continue
         parts = glob.glob(os.path.join(glob.escape(d), "*.parquet"))
         doomed = [
             p
@@ -577,8 +581,9 @@ def vacuum(table: str, keep_last: int = 1) -> int:
             and (stale or rel in expired)
         ]
         for p in doomed:
-            os.remove(p)
-        removed += len(doomed)
+            with contextlib.suppress(FileNotFoundError):  # another vacuum removed it
+                os.remove(p)
+                removed += 1
         if len(doomed) == len(parts) and (doomed or stale):
             shutil.rmtree(d, ignore_errors=True)  # no live file left in it
     return removed

@@ -75,6 +75,27 @@ class TestRunSql:
         res = P.run_sql(spark, "SELECT FROM nonsense !!")
         assert not res.ok and "error" in res.detail
 
+    def test_select_is_lazy(self, spark, sf_dir):
+        """run_sql parses and analyzes a SELECT without running it: no
+        Spark job starts until the caller's action, which runs it once."""
+        import uuid
+
+        register_views(spark, sf_dir)
+        sc = spark.sparkContext
+        group = f"run_sql-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "run_sql laziness")
+        try:
+            res = P.run_sql(
+                spark, "SELECT o_orderstatus, count(*) AS n FROM orders GROUP BY o_orderstatus"
+            )
+            launched = list(sc.statusTracker().getJobIdsForGroup(group))
+            rows = res.detail["result"].collect()
+        finally:
+            sc.setJobGroup(None, None)
+        assert res.ok and launched == []
+        assert set(res.detail) == {"result"}
+        assert sum(r["n"] for r in rows) == 1500
+
 
 class TestValidateAndProfile:
     def test_validate_green_and_red(self, spark, sf_dir):

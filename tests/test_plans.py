@@ -729,3 +729,39 @@ def test_unimax_frame_is_source_sized(spark, sf_dir):
     plan = formatted_plan(entrymod.q_unimax(spark, sf_dir))
     assert "Join" not in plan
     assert "CartesianProduct" not in plan
+
+
+def _windows(df) -> int:
+    """Window operators in the physical plan (WindowGroupLimit not
+    counted)."""
+    import re
+
+    return len(re.findall(r"^\(\d+\) Window$", formatted_plan(df), re.M))
+
+
+def test_merge_upsert_plans_one_dedup_window(spark):
+    """The anti-join keeps target rows whose key the source lacks; it
+    reads the source's keys before the dedup, so the dedup window is
+    planned once, for the rows that win."""
+    from azure_data_engineering_spark.operators.upsert import default_dedup_order, merge_upsert
+
+    target = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    source = spark.createDataFrame([(2, "B"), (2, "C"), (3, "c")], "k int, v string")
+    merged = merge_upsert(target, source, ["k"], dedup_order=default_dedup_order(source.columns, ["k"]))
+    assert _windows(merged) == 1
+    assert sorted(map(tuple, merged.collect())) == [(1, "a"), (2, "C"), (3, "c")]
+
+
+def test_apply_cdc_plans_one_dedup_window(spark):
+    from pyspark.sql import functions as F
+
+    from azure_data_engineering_spark.operators.upsert import apply_cdc
+
+    target = spark.createDataFrame([(1, "a"), (2, "b"), (4, "d")], "k int, v string")
+    changes = spark.createDataFrame(
+        [(2, "B", "U"), (2, "x", "D"), (3, "c", "I"), (4, "D", "U")], "k int, v string, op string"
+    )
+    # the delete outranks the update for key 2
+    out = apply_cdc(target, changes, ["k"], dedup_order=[F.col("op").asc()])
+    assert _windows(out) == 1
+    assert sorted(map(tuple, out.collect())) == [(1, "a"), (3, "c"), (4, "D")]

@@ -44,6 +44,36 @@ def test_sanitize_output_is_clean(spark, raw):
     assert all(ord(ch) < 128 for ch in out)
 
 
+# arbitrary text, with the characters the chain rewrites drawn often
+hostile_text_strategy = st.text(
+    alphabet=st.one_of(
+        st.sampled_from(",'\n\\/- \r\t\"é中"),
+        st.characters(codec="utf-8", exclude_categories=("Cs",)),
+    ),
+    max_size=60,
+)
+
+
+@given(raws=st.lists(hostile_text_strategy, min_size=1, max_size=16))
+@settings(**SETTINGS)
+def test_sanitize_matches_reference_chain(spark, raws):
+    """The reference's Python chain (HelperFunction.py:36-41), step by
+    step, on arbitrary text."""
+    expected = [
+        raw.replace(",", "")
+        .replace("'", "")
+        .replace("\n", " ")
+        .replace("\\", " ")
+        .replace("/", "-")
+        .encode("ascii", "ignore")
+        .decode()
+        for raw in raws
+    ]
+    df = spark.createDataFrame([(i, raw) for i, raw in enumerate(raws)], "i int, t string")
+    got = df.select("i", sanitize_cell(F.col("t")).alias("a")).orderBy("i").collect()
+    assert [r["a"] for r in got] == expected
+
+
 rows_strategy = st.lists(
     st.tuples(st.integers(0, 9), st.integers(0, 100)), min_size=0, max_size=8
 )

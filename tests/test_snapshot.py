@@ -163,6 +163,45 @@ class TestCrashAndVacuum:
         v3 = {(r.k, r.v) for r in sn.snapshot_read(spark, table, version=3).collect()}
         assert v3 == {(2, "x")}
 
+    @pytest.mark.parametrize("race_after", ["commit_dirs", "doomed_files"])
+    def test_concurrent_vacuum_skips_data_already_removed(
+        self, spark, table, monkeypatch, backdate_past_grace, race_after
+    ):
+        """A second vacuum runs while the first walks the data
+        directories: right after the first lists the commit directories,
+        or right after it lists the files of a directory it is about to
+        empty. The racer deletes both stale orphan directories first;
+        the first vacuum must skip what is gone instead of failing, and
+        between them each orphan is deleted exactly once."""
+        sn.snapshot_write(_df(spark, [(1, "a")]), table)
+        orphans = set()
+        for rows in ([(8, "y")], [(9, "z")]):
+            staged = sn._stage_data(_df(spark, rows), table)  # no manifest, no pointer
+            backdate_past_grace(table, staged)
+            orphans.update(staged)
+        listing = sn.glob.glob
+        raced = {}
+
+        def list_then_race(pattern, *args, **kwargs):
+            found = listing(pattern, *args, **kwargs)
+            if race_after == "commit_dirs":
+                hit = pattern.endswith("commit-*")
+            else:
+                hit = any(os.path.relpath(p, table) in orphans for p in found)
+            if hit and not raced:
+                raced["removed"] = None  # set first: the racer's own listings pass through
+                raced["removed"] = sn.vacuum(table, keep_last=1)
+            return found
+
+        monkeypatch.setattr(sn.glob, "glob", list_then_race)
+        removed = sn.vacuum(table, keep_last=1)
+        monkeypatch.undo()
+        assert raced["removed"] == len(orphans) and removed == 0
+        live = {os.path.dirname(f) for f in sn._read_manifest(table, 1)}
+        assert set(os.listdir(os.path.join(table, "data"))) == {os.path.basename(d) for d in live}
+        got = {(r.k, r.v) for r in sn.snapshot_read(spark, table).collect()}
+        assert got == {(1, "a")}
+
 
 class TestStreamingSink:
     def test_stream_merges_each_batch_as_one_commit(self, spark, table, tmp_path):

@@ -104,6 +104,43 @@ class TestExcelDistributed:
         assert {r["sheet"] for r in out.collect()} == {"S1"}
 
 
+_MAIN = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+
+
+def _parse(sheet: str, shared: str | None = None, ns: str | None = _MAIN) -> list[list[str]]:
+    """Rows of a one-sheet workbook through `parse_xlsx_bytes`. With
+    `ns` set, `sheet` is the <sheetData> body and `shared` the <sst>
+    body, both wrapped in that default namespace; with `ns=None` they
+    are whole parts."""
+    import io
+    import zipfile
+
+    from azure_data_engineering_spark.sources.excel import parse_xlsx_bytes
+
+    if ns is not None:
+        sheet = f'<worksheet xmlns="{ns}"><sheetData>{sheet}</sheetData></worksheet>'
+        shared = None if shared is None else f'<sst xmlns="{ns}">{shared}</sst>'
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        zf.writestr(
+            "xl/workbook.xml",
+            f'<workbook xmlns="{_MAIN}" '
+            'xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">'
+            '<sheets><sheet name="S" sheetId="1" r:id="rId1"/></sheets></workbook>',
+        )
+        zf.writestr(
+            "xl/_rels/workbook.xml.rels",
+            '<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">'
+            '<Relationship Id="rId1" Type="t" Target="worksheets/sheet1.xml"/></Relationships>',
+        )
+        if shared is not None:
+            zf.writestr("xl/sharedStrings.xml", '<?xml version="1.0" encoding="UTF-8"?>' + shared)
+        zf.writestr("xl/worksheets/sheet1.xml", '<?xml version="1.0" encoding="UTF-8"?>' + sheet)
+    book = parse_xlsx_bytes(buf.getvalue())
+    assert list(book) == ["S"]
+    return book["S"]
+
+
 class TestStdlibXlsx:
     """Real .xlsx bytes through the stdlib OOXML reader — no openpyxl,
     no injected loader: the auto-selected default engine path."""
@@ -154,6 +191,88 @@ class TestStdlibXlsx:
         book = parse_xlsx_bytes(buf.getvalue())
         # sparse row padded through skipped C; rich-text runs concatenated
         assert book == {"Data": [["hello", "42", "", "TRUE"], ["rich"]]}
+
+    # The cell shapes below pin the reader's output on what real Excel
+    # writers (and hand-edited packages) emit beyond the happy path.
+
+    def test_prefixed_namespace(self):
+        sheet = (
+            f'<x:worksheet xmlns:x="{_MAIN}"><x:sheetData>'
+            '<x:row r="1"><x:c r="A1" t="inlineStr"><x:is><x:t>a</x:t></x:is></x:c>'
+            '<x:c r="C1"><x:v>3</x:v></x:c></x:row>'
+            '<x:row r="2"><x:c r="B2" t="s"><x:v>0</x:v></x:c></x:row>'
+            "</x:sheetData></x:worksheet>"
+        )
+        shared = f'<x:sst xmlns:x="{_MAIN}"><x:si><x:t>shared</x:t></x:si></x:sst>'
+        assert _parse(sheet, shared, ns=None) == [["a", "", "3"], ["", "shared"]]
+
+    def test_strict_ooxml_namespace(self):
+        strict = "http://purl.oclc.org/ooxml/spreadsheetml/main"
+        sheet = (
+            '<row><c r="A1" t="s"><v>1</v></c><c r="B1" t="b"><v>0</v></c>'
+            '<c r="C1"><v>1.5</v></c></row>'
+        )
+        shared = "<si><t>zero</t></si><si><t>one</t></si>"
+        assert _parse(sheet, shared, ns=strict) == [["one", "FALSE", "1.5"]]
+
+    def test_cells_without_r_attribute(self):
+        """A cell with no `r` lands at the number of cells already seen
+        in its row: consecutive when no cell has `r`, and possibly
+        before or over a referenced column when the row mixes both."""
+        sheet = (
+            "<row><c><v>1</v></c><c><v>2</v></c><c><v>3</v></c></row>"
+            '<row><c r="C2"><v>c</v></c><c><v>b</v></c></row>'
+            '<row><c r="A3"><v>a</v></c><c r="B3"><v>b</v></c><c><v>x</v></c></row>'
+            '<row><c r="A4"><v>a</v></c><c r="C4"><v>c</v></c><c><v>x</v></c></row>'
+        )
+        assert _parse(sheet) == [["1", "2", "3"], ["", "b", "c"], ["a", "b", "x"], ["a", "", "x"]]
+
+    def test_cdata_and_character_entities(self):
+        sheet = (
+            '<row><c r="A1" t="inlineStr"><is><t><![CDATA[a<b]]>&amp;&#x4E2D;&lt;</t></is></c>'
+            '<c r="B1" t="s"><v>0</v></c><c r="C1" t="str"><v>x &gt; y</v></c></row>'
+        )
+        shared = "<si><t>&quot;q&quot; &amp; &#233;</t></si>"
+        assert _parse(sheet, shared) == [["a<b&中<", '"q" & é', "x > y"]]
+
+    def test_multi_run_inline_rich_text(self):
+        sheet = (
+            '<row><c r="A1" t="inlineStr"><is>'
+            "<r><rPr><b/><sz val=\"11\"/></rPr><t>bo</t></r>"
+            '<r><t xml:space="preserve">ld </t></r><r><rPr><i/></rPr><t>text</t></r>'
+            "</is></c></row>"
+        )
+        assert _parse(sheet) == [["bold text"]]
+
+    def test_formula_string_cell_takes_cached_value(self):
+        sheet = (
+            '<row><c r="A1" t="str"><f>CONCAT("a","b")</f><v>ab</v></c>'
+            '<c r="B1"><f>1+1</f><v>2</v></c><c r="C1" t="str"><f>A1</f></c></row>'
+        )
+        assert _parse(sheet) == [["ab", "2", ""]]
+
+    def test_error_cell(self):
+        sheet = '<row><c r="A1" t="e"><v>#DIV/0!</v></c><c r="B1" t="e"><f>NA()</f><v>#N/A</v></c></row>'
+        assert _parse(sheet) == [["#DIV/0!", "#N/A"]]
+
+    def test_shared_string_cell_without_v(self):
+        sheet = '<row><c r="A1" t="s"/><c r="B1" t="s"><f>X</f></c><c r="C1" t="s"><v>0</v></c></row>'
+        assert _parse(sheet, "<si><t>only</t></si>") == [["", "", "only"]]
+
+    def test_empty_v(self):
+        sheet = '<row><c r="A1"><v/></c><c r="B1" t="b"><v></v></c><c r="C1" t="str"><v/></c></row>'
+        assert _parse(sheet) == [["", "FALSE", ""]]
+
+    def test_shared_string_phonetic_runs_are_concatenated(self):
+        """Every <t> under an <si> joins the string, the phonetic
+        (<rPh>) runs included."""
+        shared = (
+            "<si><t>漢字</t><rPh sb=\"0\" eb=\"2\"><t>カンジ</t></rPh>"
+            '<phoneticPr fontId="1" type="noConversion"/></si>'
+            "<si><r><t>a</t></r><rPh sb=\"0\" eb=\"1\"><t>b</t></rPh></si>"
+        )
+        sheet = '<row><c r="A1" t="s"><v>0</v></c><c r="B1" t="s"><v>1</v></c></row>'
+        assert _parse(sheet, shared) == [["漢字カンジ", "ab"]]
 
     def test_driver_ingest_real_file(self, spark, tmp_path):
         from azure_data_engineering_spark.sources.excel import write_minimal_xlsx
