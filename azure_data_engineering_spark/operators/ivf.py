@@ -14,7 +14,8 @@ Spark-first shape:
   codegen expression (argmin over nlist dot products), no UDF;
 - search: queries join the corpus on cell id (hash equi-join on a
   low-cardinality key — prefer nlist >> shuffle partitions at scale),
-  exact cosine within the probed cells, per-query top-k.
+  exact cosine within the probed cells (the Arrow-batched kernel,
+  functions/vectors._cosine_pairs), per-query top-k.
 """
 
 from __future__ import annotations
@@ -24,11 +25,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from azure_data_engineering_spark.functions.vectors import (
-    cosine_from_norms,
-    dot,
-    l2_norm,
-)
+from azure_data_engineering_spark.functions.vectors import _cosine_pairs, dot
+from azure_data_engineering_spark.operators.similarity import _topk_pairs
 
 
 def train_centroids(
@@ -101,44 +99,31 @@ def ivf_top_k(
     vec_col: str = "embedding",
     k: int = 10,
     nprobe: int = 4,
-    round_digits: int = 6,
+    round_digits: int | None = 6,
 ) -> DataFrame:
     """Approximate top-k cosine: corpus rows live in their nearest
     cell; each query probes its nprobe nearest cells. Work per query
     ≈ nprobe/nlist of the corpus, reached via a hash equi-join on
     cell — never a cartesian."""
-    # norms hoisted to the join inputs: one interpreted fold per
-    # candidate pair, not three — see vectors.cosine_from_norms (r12)
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_vec"),
-        l2_norm(F.col(vec_col)).alias("__cn"),
         _nearest_cells(F.col(vec_col), centroids, 1)[0].alias("cell"),
     )
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
         F.explode(_nearest_cells(F.col(vec_col), centroids, nprobe)).alias("cell"),
     )
     scored = (
         F.broadcast(q)
         .join(c, "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.round(
-                cosine_from_norms(
-                    F.col("q_vec"), F.col("c_vec"), F.col("__qn"), F.col("__cn")
-                ),
-                round_digits,
-            ),
-        )
+        .withColumn("cosine", _cosine_pairs(F.col("q_vec"), F.col("c_vec")))
         .groupBy("query_id", "neighbor_id")
         .agg(F.first("cosine").alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _topk_pairs(scored, "query_id", k, round_digits)
 
 
 # ------------------------------------------------------------------ IVF-PQ
@@ -212,9 +197,9 @@ def _pq_encode_udf(codebooks):
     """Arrow-batched PQ encoder: per batch, ONE numpy matmul per
     subspace (argmin ||x-c||^2 == argmax 2x.c - ||c||^2); ties go to
     the lower code id (argmax returns the first maximum). The same
-    justified-pandas-UDF case as similarity._bucket_arrow — a literal
-    unrolled ksub*m expression tree is interpreted per-row by
-    Catalyst HOFs and measured ~20x slower."""
+    justified-pandas-UDF case as similarity.hyperplane_buckets_arrow —
+    a literal unrolled ksub*m expression tree is interpreted per-row
+    by Catalyst HOFs and measured ~20x slower."""
     from pyspark.sql.functions import pandas_udf
 
     books = [np.asarray(b, dtype=np.float64) for b in codebooks]
@@ -283,8 +268,9 @@ def ivfpq_top_k(
 
     Plan: one broadcast-query equi-join on cell, two window top-ks
     (ADC shortlist, exact re-rank); encoding and ADC are Arrow-batched
-    numpy (see _pq_encode_udf), cell assignment and the final exact
-    cosine stay in codegen."""
+    numpy (see _pq_encode_udf), as is the exact re-rank
+    (functions/vectors._cosine_pairs); cell assignment stays in
+    codegen."""
     from azure_data_engineering_spark.functions.vectors import l2_normalize
 
     enc = _pq_encode_udf(codebooks)
@@ -292,14 +278,12 @@ def ivfpq_top_k(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_vec"),
-        l2_norm(F.col(vec_col)).alias("__cn"),
         _nearest_cells(F.col(vec_col), centroids, 1)[0].alias("cell"),
         enc(l2_normalize(F.col(vec_col))).alias("codes"),
     )
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
         l2_normalize(F.col(vec_col)).alias("qn"),
         F.explode(_nearest_cells(F.col(vec_col), centroids, nprobe)).alias("cell"),
     )
@@ -315,23 +299,10 @@ def ivfpq_top_k(
     shortlist = cand.withColumn("__r", F.row_number().over(w1)).filter(
         F.col("__r") <= int(refine_factor) * k
     )
-    refined = shortlist.withColumn(
-        "cosine",
-        F.round(
-            cosine_from_norms(
-                F.col("q_vec"), F.col("c_vec"), F.col("__qn"), F.col("__cn")
-            ),
-            round_digits,
-        ),
+    refined = shortlist.select(
+        "query_id", "neighbor_id", _cosine_pairs(F.col("q_vec"), F.col("c_vec")).alias("cosine")
     )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        refined.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _topk_pairs(refined, "query_id", k, round_digits)
 
 
 # ------------------------------------------------- incremental index
@@ -435,10 +406,7 @@ def ivfpq_search_index(
     (same ADC + refine), but the candidate side scans 17-byte index
     rows instead of recomputing codes from raw vectors, which is the
     whole point of maintaining the index incrementally."""
-    from azure_data_engineering_spark.functions.vectors import (
-        cosine_from_norms,
-        l2_normalize,
-    )
+    from azure_data_engineering_spark.functions.vectors import l2_normalize
     from azure_data_engineering_spark.sources.snapshot import snapshot_read
 
     adc = _adc_score_udf(codebooks)
@@ -448,7 +416,6 @@ def ivfpq_search_index(
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
         l2_normalize(F.col(vec_col)).alias("qn"),
         F.explode(_nearest_cells(F.col(vec_col), centroids, nprobe)).alias("cell"),
     )
@@ -464,25 +431,8 @@ def ivfpq_search_index(
     shortlist = cand.withColumn("__r", F.row_number().over(w1)).filter(
         F.col("__r") <= int(refine_factor) * k
     )
-    vecs = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        l2_norm(F.col(vec_col)).alias("__cn"),
+    vecs = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
+    refined = shortlist.join(vecs, "neighbor_id").select(
+        "query_id", "neighbor_id", _cosine_pairs(F.col("q_vec"), F.col("c_vec")).alias("cosine")
     )
-    refined = shortlist.join(vecs, "neighbor_id").withColumn(
-        "cosine",
-        F.round(
-            cosine_from_norms(
-                F.col("q_vec"), F.col("c_vec"), F.col("__qn"), F.col("__cn")
-            ),
-            round_digits,
-        ),
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        refined.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _topk_pairs(refined, "query_id", k, round_digits)

@@ -28,10 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from azure_data_engineering_spark.functions.vectors import (
-    cosine_from_norms,
-    l2_norm,
-)
+from azure_data_engineering_spark.functions.vectors import _cosine_pairs
 from azure_data_engineering_spark.operators.ivf import _nearest_cells
 
 
@@ -49,33 +46,25 @@ def semdedup(
     smaller-id row in its cell has rounded cosine ≥ threshold; by
     construction every dropped row has a true near-duplicate that
     survives (its witness is kept or is itself dropped by a yet
-    smaller witness, transitively bottoming out at the min id)."""
+    smaller witness, transitively bottoming out at the min id).
+    In-cell pairs are scored by the exact Arrow kernel
+    (functions/vectors._cosine_pairs); a pair with no finite cosine (a
+    NaN component, a null vector) scores null and never matches."""
     assigned = corpus.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
-        # norm hoisted: one interpreted fold per in-cell pair, not
-        # three — see vectors.cosine_from_norms (r12)
-        l2_norm(F.col(vec_col)).alias("__n"),
         _nearest_cells(F.col(vec_col), centroids, 1)[0].alias("cell"),
     )
     earlier = assigned.select(
         F.col("id").alias("e_id"),
         F.col("v").alias("e_v"),
-        F.col("__n").alias("__e_n"),
         F.col("cell"),
     )
     dropped = (
         assigned.join(earlier, "cell")
         .filter(F.col("e_id") < F.col("id"))
-        .filter(
-            F.round(
-                cosine_from_norms(
-                    F.col("v"), F.col("e_v"), F.col("__n"), F.col("__e_n")
-                ),
-                round_digits,
-            )
-            >= threshold
-        )
+        .withColumn("cosine", F.round(_cosine_pairs(F.col("v"), F.col("e_v")), round_digits))
+        .filter(F.col("cosine") >= threshold)
         .select("id")
         .distinct()
     )

@@ -5,9 +5,11 @@ hyperplane LSH bucketing (sign-bit sketch) so each query compares only
 against its bucket — the standard public ANN recipe (Charikar '02;
 Indyk-Motwani '98), expressed as DataFrame ops.
 
-All vector math is Catalyst higher-order functions (functions/
-vectors.py) — JVM codegen, no Python boundary. The broadcast side is
-always the *query* set (assumed small); the corpus side streams.
+Every exact cosine is scored by the one Arrow-batched numpy kernel in
+functions/vectors.py (`_cosine`): all pairs of a driver-collected query
+panel against each corpus batch in brute_force_top_k, joined candidate
+pairs (`_cosine_pairs`) in the LSH path. Ranking stays in Spark — the
+round-then-rank window of _topk_pairs.
 """
 
 from __future__ import annotations
@@ -18,12 +20,12 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
-from azure_data_engineering_spark.functions.vectors import (
-    cosine_from_norms,
-    cosine_similarity,
-    l2_norm,
-)
+from azure_data_engineering_spark.functions.vectors import _cosine, _cosine_pairs, _pack
+
+# largest query panel brute_force_top_k collects to the driver
+_MAX_QUERIES = 4096
 
 
 def _topk_pairs(scored: DataFrame, query_id: str, k: int, round_digits: int | None) -> DataFrame:
@@ -48,110 +50,46 @@ def brute_force_top_k(
     round_digits: int | None = 6,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
+    Returns (query_id, neighbor_id, cosine, rank); ids keep their input
+    type, a query never neighbours a row with its own id.
 
-    queries is broadcast (small set); the corpus scan is a single pass
-    with the dot product in codegen — O(|Q|·|C|·d) flops but only one
-    shuffle (the per-query top-k window on |Q|·|C| rows; with the
-    WindowGroupLimit push-down each partition keeps k rows per query).
-    Returns (query_id, neighbor_id, cosine, rank).
-    """
-    # norms hoisted to the join inputs: one interpreted fold per pair
-    # (the dot), not three — see vectors.cosine_from_norms (r12)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        l2_norm(F.col(vec_col)).alias("__cn"),
-    )
-    scored = (
-        F.broadcast(q)
-        .join(c, F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            cosine_from_norms(
-                F.col("q_vec"), F.col("c_vec"), F.col("__qn"), F.col("__cn")
-            ),
-        )
-        .select("query_id", "neighbor_id", "cosine")
-    )
-    return _topk_pairs(scored, "query_id", k, round_digits)
+    The query panel (at most _MAX_QUERIES rows, else ValueError — cap
+    it with a hash sample) is collected driver-side and closure-
+    broadcast into a mapInPandas over the corpus, which never moves.
+    Each corpus batch scores against the whole panel in one call of the
+    vectors._cosine kernel, so cosines are bit-identical to
+    functions/vectors.cosine_similarity; a null or NaN score (null
+    vector, length mismatch, NaN component) ranks after every scored
+    neighbour.
 
-
-def brute_force_top_k_arrow(
-    queries: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    round_digits: int | None = 6,
-    max_queries: int = 4096,
-) -> DataFrame:
-    """`brute_force_top_k` with the |Q|·|C| pair scoring done in one
-    Arrow-batched numpy kernel instead of the interpreted HOF fold —
-    same results, ~100x the pair throughput (the HOF `aggregate`
-    lambda is evaluated per element per pair; the kernel is
-    vectorized float64 arithmetic over the whole batch).
-
-    BIT-IDENTICAL to the expression path by construction: dot products
-    and norms accumulate strictly left-to-right one dimension at a
-    time (64 vectorized adds, each element seeing the exact IEEE op
-    sequence of functions/vectors.dot's sequential fold), zero-norm
-    pairs score 0.0, and ranking stays in Spark — the kernel emits
-    raw cosines and the usual round-then-rank window selects top-k,
-    so rounding conventions and tie-breaks are byte-for-byte the
-    expression path's. Oracle SQL written for brute_force_top_k
-    verifies this path unchanged.
-
-    The query panel is collected driver-side (bounded: max_queries,
-    default 4096 — the PQ-codebook-sample discipline) and closure-
-    broadcast into a mapInPandas over the corpus; the corpus never
-    moves.
-
-    PER-BATCH TOP-K PRUNING (r7 — the q_knn_classifier 23-29x probe
-    fix): the kernel no longer emits all |Q|·batch scored pairs into
-    the downstream window (at sf1 that was ~10^8 intermediate rows
-    through Arrow serialization — linear work, super-linear wall). Each
-    batch keeps, per query, only rows whose RAW cosine is within
-    2·10^-round_digits of the batch's k-th largest raw cosine. This is
-    provably output-identical to emitting everything: Spark's global
-    ranker orders by (round(cos, d) desc, neighbor_id asc), and
+    PER-BATCH TOP-K PRUNING: each batch keeps, per query, only rows
+    whose raw cosine is within 2·10^-round_digits of the batch's k-th
+    largest raw cosine (null scores count as -inf, so a null row
+    survives only when its batch has fewer than k scored candidates).
+    This is provably output-identical to emitting everything: Spark's
+    global ranker orders by (round(cos, d) desc, neighbor_id asc), and
     round(v) ∈ [v − 0.5·10^-d, v + 0.5·10^-d], so a dropped row
     (raw < kth_raw − 2·10^-d) has rounded value STRICTLY below the
     rounded values of ≥ k kept batch rows — it can never enter any
-    top-k that the kept rows contend for, regardless of the engine's
-    rounding convention or tie-breaks. Emitted volume drops from
-    |Q|·batch to ≈ |Q|·k per batch (~2000x at the default 10k Arrow
-    batch), and the existing round-then-rank window stays the single
-    source of ranking truth — the oracle SQL is unchanged."""
+    top-k that the kept rows contend for. Emitted volume drops from
+    |Q|·batch to ≈ |Q|·k per batch, and the round-then-rank window
+    stays the single source of ranking truth."""
     import numpy as np
     import pandas as pd
 
     q_rows = (
-        queries.select(
-            F.col(id_col).cast("long").alias("qid"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        )
-        .limit(max_queries + 1)
+        queries.filter(F.col(id_col).isNotNull())
+        .select(F.col(id_col).alias("qid"), F.col(vec_col).alias("v"))
+        .limit(_MAX_QUERIES + 1)
         .collect()
     )
-    if len(q_rows) > max_queries:
+    if len(q_rows) > _MAX_QUERIES:
         raise ValueError(
-            f"brute_force_top_k_arrow: query panel exceeds max_queries="
-            f"{max_queries}; cap the panel (hash-sample) or raise the bound"
+            f"brute_force_top_k: query panel exceeds {_MAX_QUERIES} rows; "
+            "cap the panel (hash-sample) first"
         )
-    q_ids = np.array([r["qid"] for r in q_rows], dtype="int64")
-    q_mat = np.array([r["v"] for r in q_rows], dtype="float64")
-    n_q, dim = q_mat.shape if q_mat.size else (0, 0)
-    # sequential left-fold norms: acc = acc + x_i*x_i, i ascending
-    q_norm_sq = np.zeros(n_q)
-    for i in range(dim):
-        q_norm_sq = q_norm_sq + q_mat[:, i] * q_mat[:, i]
-    q_norm = np.sqrt(q_norm_sq)
-
+    q_ids = pd.Series([r["qid"] for r in q_rows]).to_numpy()
+    q_mat, q_len = _pack([r["v"] for r in q_rows])
     # conservative prune margin: 2 rounding units under the global
     # ranker's round_digits (see docstring proof); no pruning when the
     # caller ranks on raw cosines with margin 0 (>= keeps exact ties)
@@ -159,45 +97,34 @@ def brute_force_top_k_arrow(
 
     def score(batches):
         for pdf in batches:
-            if len(pdf) == 0 or n_q == 0:
+            if len(pdf) == 0 or len(q_ids) == 0:
                 continue
-            c_ids = pdf["nid"].to_numpy(dtype="int64")
-            c_mat = np.array(
-                [np.asarray(v, dtype="float64") for v in pdf["v"]]
-            )
-            m = len(c_ids)
-            dots = np.zeros((m, n_q))
-            c_norm_sq = np.zeros(m)
-            for i in range(dim):
-                ci = c_mat[:, i]
-                dots = dots + ci[:, None] * q_mat[None, :, i]
-                c_norm_sq = c_norm_sq + ci * ci
-            denom = np.sqrt(c_norm_sq)[:, None] * q_norm[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(denom == 0, 0.0, dots / denom)
-            valid = c_ids[:, None] != q_ids[None, :]  # (m, n_q)
-            if m > k:
-                masked = np.where(valid, cos, -np.inf)
+            c_ids = pdf["nid"].to_numpy()
+            c_mat, c_len = _pack(pdf["v"])
+            # (m, n_q): corpus rows x panel queries
+            cos = _cosine(c_mat[:, None, :], c_len[:, None], q_mat[None], q_len[None])
+            valid = c_ids[:, None] != q_ids[None, :]
+            if len(c_ids) > k:
+                masked = np.where(valid & ~np.isnan(cos), cos, -np.inf)
                 # k-th largest raw cosine per query (column)
                 thresh = -np.partition(-masked, k - 1, axis=0)[k - 1, :]
-                keep_mat = valid & (masked >= (thresh - margin)[None, :])
-            else:
-                keep_mat = valid
-            cf, qf = np.nonzero(keep_mat)
+                valid &= masked >= (thresh - margin)[None, :]
+            cf, qf = np.nonzero(valid)
             yield pd.DataFrame(
-                {
-                    "query_id": q_ids[qf],
-                    "neighbor_id": c_ids[cf],
-                    "cosine": cos[cf, qf],
-                }
+                {"query_id": q_ids[qf], "neighbor_id": c_ids[cf], "cosine": cos[cf, qf]}
             )
 
-    c = corpus.select(
-        F.col(id_col).cast("long").alias("nid"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+    schema = StructType(
+        [
+            StructField("query_id", queries.schema[id_col].dataType),
+            StructField("neighbor_id", corpus.schema[id_col].dataType),
+            StructField("cosine", DoubleType()),
+        ]
     )
-    scored = c.mapInPandas(
-        score, schema="query_id long, neighbor_id long, cosine double"
+    scored = (
+        corpus.filter(F.col(id_col).isNotNull())
+        .select(F.col(id_col).alias("nid"), F.col(vec_col).alias("v"))
+        .mapInPandas(score, schema=schema)
     )
     return _topk_pairs(scored, "query_id", k, round_digits)
 
@@ -264,7 +191,6 @@ def lsh_bucketed_top_k(
         return df.select(
             F.col(id_col).alias(out_id),
             F.col(vec_col).alias(out_vec),
-            l2_norm(F.col(vec_col)).alias(out_vec + "_n"),
             F.posexplode(buckets).alias("table", "bucket"),
         )
 
@@ -274,17 +200,10 @@ def lsh_bucketed_top_k(
         F.broadcast(q)
         .join(c, ["table", "bucket"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        # hoisted norms: one fold per candidate pair (r12)
-        .withColumn(
-            "cosine",
-            cosine_from_norms(
-                F.col("q_vec"), F.col("c_vec"), F.col("q_vec_n"), F.col("c_vec_n")
-            ),
-        )
-        # a pair colliding in several tables appears several times;
-        # cosine is identical, so dedupe by key
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.first("cosine").alias("cosine"))
+        # a pair colliding in several tables appears several times:
+        # dedupe by key first, so each pair is scored once
+        .dropDuplicates(["query_id", "neighbor_id"])
+        .select("query_id", "neighbor_id", _cosine_pairs(F.col("q_vec"), F.col("c_vec")).alias("cosine"))
     )
     return _topk_pairs(candidates, "query_id", k, round_digits)
 
@@ -297,7 +216,6 @@ def knn_classify(
     vec_col: str = "embedding",
     k: int = 5,
     round_digits: int | None = 6,
-    method: str = "hof",
 ) -> DataFrame:
     """k-NN majority-vote classification of query vectors against a
     labeled corpus — the standard embedding-space eval (probe a
@@ -305,20 +223,15 @@ def knn_classify(
     labels) and the simplest production labeler for "tag this new
     document like its nearest labeled neighbors".
 
-    Built on exact brute-force cosine (deterministic round-then-rank),
-    then one count aggregate per (query, label) and a deterministic
-    argmax (most votes, ties toward the SMALLEST label — the same
-    total-order discipline as label_propagation).
-    method="hof" scores pairs with the Catalyst HOF fold
-    (brute_force_top_k); method="arrow" with the bit-identical
-    vectorized kernel (brute_force_top_k_arrow) — the production
-    choice for panels in the hundreds against large corpora (the HOF
-    lambda interpreter is the bottleneck, ~35 us/pair). For corpus-
-    scale query sets swap the neighbor source for ivf_topk/
-    lsh_bucketed_top_k — the vote logic is neighbor-source-agnostic.
+    Built on exact brute-force cosine (brute_force_top_k: the
+    vectorized kernel, deterministic round-then-rank), then one count
+    aggregate per (query, label) and a deterministic argmax (most
+    votes, ties toward the SMALLEST label — the same total-order
+    discipline as label_propagation). For corpus-scale query sets swap
+    the neighbor source for ivf_top_k/lsh_bucketed_top_k — the vote
+    logic is neighbor-source-agnostic.
     Returns (query_id, predicted_label, n_votes)."""
-    nn_fn = brute_force_top_k_arrow if method == "arrow" else brute_force_top_k
-    nn = nn_fn(
+    nn = brute_force_top_k(
         queries, corpus, id_col=id_col, vec_col=vec_col, k=k,
         round_digits=round_digits,
     )

@@ -57,3 +57,19 @@ class TestSemDedup:
         )
         kept = sorted(r["id"] for r in semdedup(df, CENTROIDS).collect())
         assert kept == [1, 2]
+
+    def test_nan_vector_drops_nothing(self, spark):
+        # one cell; the NaN vector holds the smallest id. Its cosines are
+        # not finite, so it is no one's duplicate: all five rows stay
+        df = _df(
+            spark,
+            [
+                (0, [float("nan"), 1.0, 0.0, 0.0]),
+                (1, [1.0, 0.0, 0.0, 0.0]),
+                (2, [1.0, 1.0, 0.0, 0.0]),
+                (3, [1.0, 0.0, 1.0, 0.0]),
+                (4, [1.0, 0.0, 0.0, 1.0]),
+            ],
+        )
+        kept = sorted(r["id"] for r in semdedup(df, CENTROIDS[:1]).collect())
+        assert kept == [0, 1, 2, 3, 4]

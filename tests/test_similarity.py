@@ -1,11 +1,37 @@
-"""Similarity-search tests: brute-force exactness, LSH recall."""
+"""Similarity-search tests: brute-force exactness, LSH recall, and the
+exact cosine kernel's contract (bit-identity, unscored vectors, ids)."""
 
 from __future__ import annotations
+
+import numpy as np
+import pytest
 
 from pyspark.sql import functions as F
 
 from azure_data_engineering_spark.functions.vectors import cosine_similarity, dot, l2_norm
+from azure_data_engineering_spark.operators.ivf import ivf_top_k
 from azure_data_engineering_spark.operators.similarity import brute_force_top_k, lsh_bucketed_top_k
+
+DIM = 16
+# two cells; probing both makes ivf_top_k score every pair
+CENTROIDS = [[1.0] + [0.0] * (DIM - 1), [0.0] * (DIM - 1) + [1.0]]
+
+EXACT_SEARCHES = {
+    "brute_force_top_k": lambda q, c, k: brute_force_top_k(q, c, k=k, round_digits=None),
+    "ivf_top_k": lambda q, c, k: ivf_top_k(q, c, CENTROIDS, k=k, nprobe=2, round_digits=None),
+    "lsh_bucketed_top_k": lambda q, c, k: lsh_bucketed_top_k(
+        q, c, dim=DIM, k=k, planes=2, round_digits=None
+    ),
+}
+
+
+def _seeded(spark, n=40, extra=()):
+    """n seeded float32 vectors (vec_id 0 is the zero vector) plus any
+    `extra` (vec_id, embedding) rows."""
+    vecs = np.random.default_rng(7).standard_normal((n, DIM)).astype(np.float32)
+    vecs[0] = 0.0
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)] + list(extra)
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
 
 class TestVectorMath:
@@ -60,3 +86,69 @@ class TestLshAnn:
         # 2 hyperplanes = 4 coarse buckets; same-bucket neighbors
         # should cover a solid fraction of the true top-3
         assert recall >= 0.5, f"ANN recall {recall}"
+
+
+class TestExactKernel:
+    @pytest.mark.parametrize("search", sorted(EXACT_SEARCHES))
+    def test_raw_cosine_equals_cosine_similarity(self, spark, search):
+        emb = _seeded(spark)
+        q = emb.filter(F.col("vec_id") < 6)
+        out = EXACT_SEARCHES[search](q, emb, 40)
+        vq = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
+        vc = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv"))
+        rows = (
+            out.join(vq, "query_id")
+            .join(vc, "neighbor_id")
+            .select("query_id", "cosine", cosine_similarity(F.col("qv"), F.col("cv")).alias("truth"))
+            .collect()
+        )
+        if search != "lsh_bucketed_top_k":  # exact searches score every pair
+            assert len(rows) == 6 * 39
+        assert any(r["query_id"] == 0 for r in rows)  # the zero vector is scored
+        assert [r["cosine"] for r in rows] == [r["truth"] for r in rows]
+
+    def test_string_ids_round_trip(self, spark):
+        rows = [("a", [1.0, 0.0]), ("b", [1.0, 0.1]), ("c", [0.0, 1.0])]
+        emb = spark.createDataFrame(rows, "vec_id string, embedding array<float>")
+        out = brute_force_top_k(emb.filter(F.col("vec_id") == "a"), emb, k=2)
+        assert out.schema["neighbor_id"].dataType.simpleString() == "string"
+        assert [(r["query_id"], r["neighbor_id"], r["rank"]) for r in out.orderBy("rank").collect()] == [
+            ("a", "b", 1),
+            ("a", "c", 2),
+        ]
+
+    def test_panel_over_the_cap_raises(self, spark):
+        q = spark.range(4097).select(
+            F.col("id").alias("vec_id"), F.array(F.lit(1.0).cast("float")).alias("embedding")
+        )
+        with pytest.raises(ValueError, match="4096"):
+            brute_force_top_k(q, q, k=1)
+
+
+def _ranks_of(out, vec_id):
+    return [(r["rank"], r["cosine"]) for r in out.filter(F.col("neighbor_id") == vec_id).collect()]
+
+
+class TestUnscoredVectors:
+    """A pair with no finite cosine scores null and ranks after every
+    scored neighbour (Spark orders NaN above every number, so a NaN
+    score would rank first)."""
+
+    @pytest.mark.parametrize("search", ["brute_force_top_k", "ivf_top_k"])
+    def test_nan_component_ranks_last(self, spark, search):
+        self._check(spark, search, [float("nan")] + [1.0] * (DIM - 1))
+
+    @pytest.mark.parametrize("search", ["brute_force_top_k", "ivf_top_k"])
+    @pytest.mark.parametrize("vec", [None, [1.0] * (DIM - 1)], ids=["null", "short"])
+    def test_null_or_short_vector_ranks_last(self, spark, search, vec):
+        self._check(spark, search, vec)
+
+    @staticmethod
+    def _check(spark, search, vec):
+        emb = _seeded(spark, extra=[(99, vec)])
+        q = emb.filter(F.col("vec_id").between(1, 3))
+        # k over the corpus: the unscored row is kept, null, ranked last
+        out = EXACT_SEARCHES[search](q, emb, 100)
+        assert _ranks_of(out, 99) == [(40, None)] * 3
+        # k below the scored candidates: the unscored row never makes it
+        assert _ranks_of(EXACT_SEARCHES[search](q, emb, 3), 99) == []
