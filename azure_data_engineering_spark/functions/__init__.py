@@ -1,4 +1,4 @@
-from azure_data_engineering_spark.functions.sanitize import sanitize_cell, sanitize_filename, ascii_strip
+from azure_data_engineering_spark.functions.sanitize import sanitize_cell, sanitize_filename
 from azure_data_engineering_spark.functions.datetime_utils import retention_match, archive_folder
 from azure_data_engineering_spark.functions.text import (
     whitespace_token_count,
@@ -14,7 +14,6 @@ from azure_data_engineering_spark.functions.vectors import dot, l2_norm, cosine_
 __all__ = [
     "sanitize_cell",
     "sanitize_filename",
-    "ascii_strip",
     "retention_match",
     "archive_folder",
     "whitespace_token_count",

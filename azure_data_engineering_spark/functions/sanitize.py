@@ -27,11 +27,6 @@ def sanitize_cell(col: Column) -> Column:
     return F.regexp_replace(c, "[^\\x00-\\x7F]", "")  # ascii-ignore
 
 
-def ascii_strip(col: Column) -> Column:
-    """encode('ascii','ignore') equivalent (HelperFunction.py:41)."""
-    return F.regexp_replace(col, "[^\\x00-\\x7F]", "")
-
-
 def sanitize_filename(col: Column) -> Column:
     """``re.sub('[^A-Za-z0-9]+','')`` on a basename
     (SharedCode/HelperFunction.py:18-19)."""

@@ -137,7 +137,9 @@ def hyperplane_buckets_arrow(vec_col: Column, dim: int, planes: int, tables: int
     sin((t*planes + p)*dim + i) — fixed, seed-free and reproducible
     across runs. This is the documented "vectorized Pandas UDF for
     embedding math" path — ~30x an interpreted per-plane expression
-    fold."""
+    fold. A null vector, or one whose length is not `dim`, gets a null
+    bucket array: it lands in no bucket, so it is never a candidate and
+    never finds one (an unscorable pair never matches)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -156,12 +158,15 @@ def hyperplane_buckets_arrow(vec_col: Column, dim: int, planes: int, tables: int
     # function-local `pd` alias
     @pandas_udf("array<int>")
     def _buckets(s):
-        m = np.vstack(s.to_numpy())  # (batch, dim)
+        ok = [v is not None and len(v) == dim for v in s]
+        # (scorable rows, dim); a placeholder row when none is, since vstack needs one
+        m = np.vstack([v for v, good in zip(s, ok) if good] or [np.zeros(dim)])
         bits = (m @ coeffs) > 0  # (batch, tables*planes)
         per_table = [
             (bits[:, t * planes : (t + 1) * planes] * weights).sum(axis=1) for t in range(tables)
         ]
-        return pd.Series(list(np.stack(per_table, axis=1).astype("int32")))
+        rows = iter(np.stack(per_table, axis=1).astype("int32"))
+        return pd.Series([next(rows) if good else None for good in ok])
 
     return _buckets(vec_col)
 
@@ -183,7 +188,8 @@ def lsh_bucketed_top_k(
     LSH amplification — recall rises with tables, candidate count with
     1/2^planes). The join is a hash equi-join on (table, bucket)
     instead of a cartesian — this is the 100 TB path; candidates per
-    query ≈ tables·|C|/2^planes.
+    query ≈ tables·|C|/2^planes. A null vector, or one whose length is
+    not `dim`, has no buckets: it neither finds nor becomes a neighbour.
     """
 
     def banded(df: DataFrame, out_id: str, out_vec: str) -> DataFrame:

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from azure_data_engineering_spark.functions.datetime_utils import retention_match
 from azure_data_engineering_spark.sources.csv_pipe import write_pipe_csv
-from azure_data_engineering_spark.sources.excel import ingest_excel as _ingest_workbook
+from azure_data_engineering_spark.sources.excel import ingest_excel_distributed
 from azure_data_engineering_spark.operators.upsert import default_dedup_order, merge_upsert
 
 
@@ -55,7 +55,8 @@ def _timed(fn: Callable[[], dict[str, Any]]) -> StepResult:
     try:
         detail = fn()
     except Exception as exc:  # mirror the reference's Error-string contract
-        return StepResult("error", time.perf_counter() - t1, {"error": repr(exc)})
+        # str(), not repr(): a Spark exception's repr drops its message
+        return StepResult("error", time.perf_counter() - t1, {"error": f"{type(exc).__name__}: {exc}"})
     return StepResult("success", time.perf_counter() - t1, detail)
 
 
@@ -66,18 +67,27 @@ def ingest_excel(
     sheet_list: str = "all",
     overwrite: bool = False,
     sanitize: bool = True,
-    workbook_loader=None,
 ) -> StepResult:
-    """step=exceltocsv: workbook → one pipe-CSV folder per sheet, named
-    `{sanitized_basename}_{sheet}` (HelperFunction.py:30-31); overwrite
-    reproduces remove_file_in_to_blob pre-truncate
-    (__init__.py:78-80)."""
+    """step=exceltocsv: a workbook, or a folder's `*.xls*` workbooks
+    (__init__.py:91-104) → one pipe-CSV folder per sheet, named
+    `{sanitized_basename}_{sheet}` (HelperFunction.py:30-31), columns
+    c0..cN padded with "" to the sheet's widest row; a sheet with no
+    rows lands as an empty folder. overwrite reproduces
+    remove_file_in_to_blob pre-truncate (__init__.py:78-80)."""
 
     def run() -> dict[str, Any]:
-        frames = _ingest_workbook(spark, src_path, sheet_list, sanitize, workbook_loader)
-        for name, df in frames.items():
-            write_pipe_csv(df, f"{dst_path}/{name}", mode="overwrite" if overwrite else "error")
-        return {"sheets": sorted(frames), "files": len(frames)}
+        cells = ingest_excel_distributed(spark, src_path, sheet_list=sheet_list, sanitize=sanitize).persist()
+        try:
+            widths = dict(cells.groupBy("source_name").agg(F.max(F.size("cells"))).collect())
+            for name, width in widths.items():
+                # get() is null past a ragged row's end, where cells[i] raises
+                # under ANSI; an empty sheet (width 0) still needs a column to write
+                rows = cells.filter((F.col("source_name") == name) & F.col("row_idx").isNotNull())
+                padded = [F.coalesce(F.get("cells", i), F.lit("")).alias(f"c{i}") for i in range(max(width, 1))]
+                write_pipe_csv(rows.select(*padded), f"{dst_path}/{name}", mode="overwrite" if overwrite else "error")
+        finally:
+            cells.unpersist()
+        return {"sheets": sorted(widths), "files": len(widths)}
 
     return _timed(run)
 

@@ -1,6 +1,6 @@
 from azure_data_engineering_spark.sources.csv_pipe import read_pipe_csv, write_pipe_csv
 from azure_data_engineering_spark.sources.listing import list_files
-from azure_data_engineering_spark.sources.excel import ingest_excel
+from azure_data_engineering_spark.sources.excel import ingest_excel_distributed
 from azure_data_engineering_spark.sources.multimodal import with_binary_payload, decode_metadata
 from azure_data_engineering_spark.sources.snapshot import (
     snapshot_compact,
@@ -14,7 +14,7 @@ __all__ = [
     "read_pipe_csv",
     "write_pipe_csv",
     "list_files",
-    "ingest_excel",
+    "ingest_excel_distributed",
     "with_binary_payload",
     "decode_metadata",
     "snapshot_write",

@@ -17,39 +17,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 
-def read_pipe_csv(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | None = None,
-    header: bool = False,
-    infer: bool = False,
-) -> DataFrame:
-    """Read reference-style pipe CSV. Default matches the reference:
-    headerless and all-string (types are the *sink's* concern there —
-    Postgres COPY coerces; SURVEY.md §1.1). Pass a schema or
-    infer=True to opt into typing at the ingest boundary."""
-    reader = spark.read.option("sep", "|").option("header", str(header).lower())
+def read_pipe_csv(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
+    """Read reference-style pipe CSV: headerless and, by default,
+    all-string like the reference (types are the *sink's* concern there
+    — Postgres COPY coerces; SURVEY.md §1.1). Pass a schema to type the
+    columns at the ingest boundary."""
+    reader = spark.read.option("sep", "|")
     if schema is not None:
         reader = reader.schema(schema)
-    elif infer:
-        reader = reader.option("inferSchema", "true")
     return reader.csv(path)
 
 
-def write_pipe_csv(
-    df: DataFrame,
-    path: str,
-    mode: str = "error",
-    partition_by: list[str] | None = None,
-    header: bool = False,
-) -> None:
-    """Write pipe CSV. mode='overwrite' reproduces the reference's
-    pre-truncate remove_file_in_to_blob behavior
-    (adffunction/__init__.py:78-80) as an atomic overwrite; partition_by
-    gives the per-group file naming (one directory per key) that the
-    reference emulates with `{basename}_{sheet}.csv` names
-    (HelperFunction.py:30-31)."""
-    writer = df.write.option("sep", "|").option("header", str(header).lower()).mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.csv(path)
+def write_pipe_csv(df: DataFrame, path: str, mode: str = "error") -> None:
+    """Write headerless pipe CSV. mode='overwrite' reproduces the
+    reference's pre-truncate remove_file_in_to_blob behavior
+    (adffunction/__init__.py:78-80) as an atomic overwrite. One folder
+    per (workbook, sheet) is the caller's naming (pipeline.ingest_excel
+    writes `{basename}_{sheet}`, HelperFunction.py:30-31)."""
+    df.write.option("sep", "|").mode(mode).csv(path)

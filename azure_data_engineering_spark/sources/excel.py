@@ -5,19 +5,18 @@ workbook → selected sheets ("all" or comma-list, :22-25) → one output
 per sheet named `{sanitized_basename}_{sheet}` (:30-31), cells
 stringified row-by-row with the destructive sanitize chain (:36-41).
 
-Spark-first design:
-- few/small files: driver-side parse → createDataFrame per sheet;
-- many/large files (the 100 TB shape): `spark.read.format("binaryFile")`
-  over the folder, then mapInPandas fans each workbook's sheets out on
-  executors — the driver never holds file bytes.
+Spark-first design: one ingest path, `ingest_excel_distributed`, for a
+workbook or a folder of them (the 100 TB shape) — a `binaryFile` scan,
+then mapInPandas fans each workbook's sheets out on executors, so the
+driver never holds file bytes. The reference's per-sheet frames are a
+projection of its long output (pipeline.ingest_excel).
 
-One parser, on the driver and on every executor: the stdlib reader
-below over the public OOXML package format (ECMA-376: xl/workbook.xml
-for sheet order, xl/_rels for sheet targets, xl/sharedStrings.xml, and
+One parser, on every executor: the stdlib reader below over the public
+OOXML package format (ECMA-376: xl/workbook.xml for sheet order,
+xl/_rels for sheet targets, xl/sharedStrings.xml, and
 shared/inline/numeric/boolean cell types). zipfile opens the package
 and each worksheet and shared-strings part is read in a single expat
-pass that takes every cell's value as its tags stream by. A workbook
-ingests to the same strings wherever it is parsed (a boolean is
+pass that takes every cell's value as its tags stream by (a boolean is
 "TRUE"/"FALSE", a date its stored serial). No pip dependency needed to
 ingest real .xlsx files.
 """
@@ -27,7 +26,7 @@ from __future__ import annotations
 import io
 import os
 import re
-from collections.abc import Callable, Iterable
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -285,10 +284,6 @@ def write_minimal_xlsx(path: str, sheets: dict[str, list[list[str]]]) -> None:
                 f"<sheetData>{body}</sheetData></worksheet>",
             )
 
-# (sheet_name -> list of rows, each row a list of cells) — the minimal
-# workbook shape the reference iterates (HelperFunction.py:27,34-35).
-WorkbookLoader = Callable[[str], dict[str, list[list[str]]]]
-
 
 def sanitize_basename(path: str) -> str:
     """`re.sub('[^A-Za-z0-9]+','')` on the file basename
@@ -307,11 +302,6 @@ def select_sheets(all_sheets: Iterable[str], sheet_list: str = "all") -> list[st
     return [s for s in names if s in wanted]
 
 
-def _default_loader(path: str) -> dict[str, list[list[str]]]:
-    with open(path, "rb") as fh:
-        return parse_xlsx_bytes(fh.read())
-
-
 def ingest_excel_distributed(
     spark: SparkSession,
     dir_path: str,
@@ -320,15 +310,18 @@ def ingest_excel_distributed(
     sanitize: bool = False,
     bytes_loader=None,
 ) -> DataFrame:
-    """Many-files ingest (the 100 TB shape): `binaryFile` scan over the
-    folder → mapInPandas fans each workbook's sheets out ON EXECUTORS —
-    the driver never holds file bytes (vs the reference's one-at-a-time
-    driver loop, adffunction/__init__.py:91-104).
+    """Excel ingest of one workbook or a folder: `binaryFile` scan of
+    the `glob` matches under `dir_path` → mapInPandas fans each
+    workbook's sheets out ON EXECUTORS — the driver never holds file
+    bytes (vs the reference's one-at-a-time driver loop, which keeps
+    only `xls*` names, adffunction/__init__.py:91-104).
 
     Returns one long DataFrame: (source_name, sheet, row_idx, cells
     array<string>) — cells stay schema-less all-string like the
-    reference's CSV stage. bytes_loader(name, payload) -> {sheet:
-    rows}; defaults to parse_xlsx_bytes, tests inject a fake.
+    reference's CSV stage. A selected sheet with no rows yields one
+    marker row, row_idx null and cells `[]`, so it still has a
+    source_name. bytes_loader(name, payload) -> {sheet: rows}; defaults
+    to parse_xlsx_bytes, tests inject a fake.
     """
     from collections.abc import Iterator
 
@@ -354,6 +347,8 @@ def ingest_excel_distributed(
                 base = sanitize_basename(row["path"])
                 book = bytes_loader(row["path"], row["content"])
                 for sheet in select_sheets(book.keys(), sheet_list):
+                    if not book[sheet]:
+                        out.append((f"{base}_{sheet}", sheet, None, []))
                     for i, cells in enumerate(book[sheet]):
                         out.append((f"{base}_{sheet}", sheet, i, [str(c) for c in cells]))
             yield pd.DataFrame(out, columns=["source_name", "sheet", "row_idx", "cells"])
@@ -366,34 +361,3 @@ def ingest_excel_distributed(
             "cells", F.transform(F.col("cells"), lambda c: sanitize_cell(c))
         )
     return df
-
-
-def ingest_excel(
-    spark: SparkSession,
-    path: str,
-    sheet_list: str = "all",
-    sanitize: bool = False,
-    workbook_loader: WorkbookLoader | None = None,
-) -> dict[str, DataFrame]:
-    """Ingest one workbook → {output_name: DataFrame of all-string cols}.
-
-    Output naming matches the reference: `{sanitized_basename}_{sheet}`
-    (HelperFunction.py:30-31). No header handling, no type inference —
-    the header row is data, like the reference (:34-42). sanitize=True
-    opts into the destructive cell chain (:36-41) — opt-in, not silent
-    (SURVEY.md §2A quirks).
-    """
-    loader = workbook_loader or _default_loader
-    book = loader(path)
-    base = sanitize_basename(path)
-    out: dict[str, DataFrame] = {}
-    for sheet in select_sheets(book.keys(), sheet_list):
-        rows = book[sheet]
-        width = max((len(r) for r in rows), default=0)
-        cols = [f"c{i}" for i in range(width)]
-        padded = [[("" if i >= len(r) or r[i] is None else str(r[i])) for i in range(width)] for r in rows]
-        df = spark.createDataFrame(padded, schema=cols) if rows else spark.createDataFrame([], schema=", ".join(f"{c} string" for c in cols) or "c0 string")
-        if sanitize:
-            df = df.select(*[sanitize_cell(df[c]).alias(c) for c in df.columns])
-        out[f"{base}_{sheet}"] = df
-    return out

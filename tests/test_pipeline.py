@@ -3,40 +3,70 @@ steps as a library)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from azure_data_engineering_spark import pipeline as P
 from azure_data_engineering_spark.catalog import register_views
 from azure_data_engineering_spark.sources.csv_pipe import read_pipe_csv
+from azure_data_engineering_spark.sources.excel import write_minimal_xlsx
 
 FAKE_BOOK = {"S1": [["a,b", "x"], ["c", "y"]], "S2": [["1"]]}
 
 
+def _workbook(tmp_path, name, book):
+    """`book` written as a real .xlsx under tmp_path/in; its path."""
+    (tmp_path / "in").mkdir(exist_ok=True)
+    path = str(tmp_path / "in" / name)
+    write_minimal_xlsx(path, book)
+    return path
+
+
 class TestIngestExcel:
     def test_writes_one_csv_dir_per_sheet(self, spark, tmp_path):
-        res = P.ingest_excel(
-            spark, "/x/My Wb.xlsx", str(tmp_path), overwrite=True, workbook_loader=lambda p: FAKE_BOOK
-        )
+        src = _workbook(tmp_path, "My Wb.xlsx", FAKE_BOOK)
+        res = P.ingest_excel(spark, src, str(tmp_path / "out"), overwrite=True)
         assert res.ok and res.detail["files"] == 2
-        rows = sorted(tuple(r) for r in read_pipe_csv(spark, str(tmp_path / "MyWb_S1")).collect())
+        rows = sorted(tuple(r) for r in read_pipe_csv(spark, str(tmp_path / "out" / "MyWb_S1")).collect())
         # sanitize on by default: comma deleted
         assert rows == [("ab", "x"), ("c", "y")]
 
     def test_sheet_selection(self, spark, tmp_path):
-        res = P.ingest_excel(
-            spark, "/x/wb.xlsx", str(tmp_path), sheet_list="S2", overwrite=True,
-            workbook_loader=lambda p: FAKE_BOOK,
-        )
+        src = _workbook(tmp_path, "wb.xlsx", FAKE_BOOK)
+        res = P.ingest_excel(spark, src, str(tmp_path / "out"), sheet_list="S2", overwrite=True)
         assert res.detail["sheets"] == ["wb_S2"]
 
     def test_error_contract(self, spark, tmp_path):
-        def boom(path):
-            raise IOError("blob download failed")
-
-        res = P.ingest_excel(spark, "/x/wb.xlsx", str(tmp_path), workbook_loader=boom)
+        missing = str(tmp_path / "missing.xlsx")
+        res = P.ingest_excel(spark, missing, str(tmp_path / "out"))
         # mirror of the reference's "Error -..." string contract
         # (adffunction/__init__.py:110-113): status, not an exception
-        assert not res.ok and "blob download failed" in res.detail["error"]
+        assert not res.ok and missing in res.detail["error"]
+
+    def test_empty_sheet_lands_as_empty_folder(self, spark, tmp_path):
+        src = _workbook(tmp_path, "wb.xlsx", {"S1": [["a"]], "Empty": [], "S2": [["b", "c"]]})
+        res = P.ingest_excel(spark, src, str(tmp_path / "out"))
+        assert res.ok and res.detail == {"sheets": ["wb_Empty", "wb_S1", "wb_S2"], "files": 3}
+        empty = str(tmp_path / "out" / "wb_Empty")
+        assert os.path.isdir(empty) and read_pipe_csv(spark, empty, schema=StructType.fromDDL("c0 string")).count() == 0
+        assert [tuple(r) for r in read_pipe_csv(spark, str(tmp_path / "out" / "wb_S2")).collect()] == [("b", "c")]
+
+    def test_folder_of_workbooks(self, spark, tmp_path):
+        """A folder is the reference's ExcelToCsv loop: every `*.xls*`
+        workbook in it, other files skipped (__init__.py:91-104)."""
+        _workbook(tmp_path, "a.xlsx", {"S": [["1"], ["2"]]})
+        _workbook(tmp_path, "b b.xlsx", {"S": [["3"]], "T": [["4", "5"]]})
+        (tmp_path / "in" / "notes.txt").write_text("not a workbook")
+        res = P.ingest_excel(spark, str(tmp_path / "in"), str(tmp_path / "out"))
+        assert res.ok and res.detail == {"sheets": ["a_S", "bb_S", "bb_T"], "files": 3}
+        assert sorted(os.listdir(tmp_path / "out")) == ["a_S", "bb_S", "bb_T"]
+        got = {
+            name: sorted(tuple(r) for r in read_pipe_csv(spark, str(tmp_path / "out" / name)).collect())
+            for name in res.detail["sheets"]
+        }
+        assert got == {"a_S": [("1",), ("2",)], "bb_S": [("3",)], "bb_T": [("4", "5")]}
 
 
 class TestLoadTable:

@@ -20,6 +20,7 @@ from pyspark.sql.types import (
 from azure_data_engineering_spark import pipeline as P
 from azure_data_engineering_spark.sources import jdbc as J
 from azure_data_engineering_spark.sources.csv_pipe import read_pipe_csv
+from azure_data_engineering_spark.sources.excel import write_minimal_xlsx
 
 URL = "jdbc:derby:memory:e2e;create=true"
 PROPS = {"driver": "org.apache.derby.iapi.jdbc.AutoloadedDriver"}
@@ -38,14 +39,11 @@ CSV_SCHEMA = StructType(
 
 def test_reference_story_end_to_end(spark, tmp_path):
     # -- step=exceltocsv: two workbooks land as pipe-CSV folders
-    ing1 = P.ingest_excel(
-        spark, "/blobs/base.xlsx", str(tmp_path / "base"), overwrite=True,
-        workbook_loader=lambda p: BASE_BOOK,
-    )
-    ing2 = P.ingest_excel(
-        spark, "/blobs/delta.xlsx", str(tmp_path / "delta"), overwrite=True,
-        workbook_loader=lambda p: DELTA_BOOK,
-    )
+    (tmp_path / "blobs").mkdir()
+    write_minimal_xlsx(str(tmp_path / "blobs" / "base.xlsx"), BASE_BOOK)
+    write_minimal_xlsx(str(tmp_path / "blobs" / "delta.xlsx"), DELTA_BOOK)
+    ing1 = P.ingest_excel(spark, str(tmp_path / "blobs" / "base.xlsx"), str(tmp_path / "base"), overwrite=True)
+    ing2 = P.ingest_excel(spark, str(tmp_path / "blobs" / "delta.xlsx"), str(tmp_path / "delta"), overwrite=True)
     assert ing1.ok and ing1.detail == {"sheets": ["base_Orders"], "files": 1}
     assert ing2.ok and ing2.detail["files"] == 1
     assert ing1.seconds >= 0

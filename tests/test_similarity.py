@@ -136,19 +136,19 @@ class TestUnscoredVectors:
 
     @pytest.mark.parametrize("search", ["brute_force_top_k", "ivf_top_k"])
     def test_nan_component_ranks_last(self, spark, search):
-        self._check(spark, search, [float("nan")] + [1.0] * (DIM - 1))
+        self._check(spark, search, [float("nan")] + [1.0] * (DIM - 1), [(40, None)] * 3)
 
-    @pytest.mark.parametrize("search", ["brute_force_top_k", "ivf_top_k"])
+    @pytest.mark.parametrize("search", ["brute_force_top_k", "ivf_top_k", "lsh_bucketed_top_k"])
     @pytest.mark.parametrize("vec", [None, [1.0] * (DIM - 1)], ids=["null", "short"])
     def test_null_or_short_vector_ranks_last(self, spark, search, vec):
-        self._check(spark, search, vec)
+        # LSH gives such a vector no buckets, so it is never a candidate
+        self._check(spark, search, vec, [] if search == "lsh_bucketed_top_k" else [(40, None)] * 3)
 
     @staticmethod
-    def _check(spark, search, vec):
+    def _check(spark, search, vec, over_corpus):
         emb = _seeded(spark, extra=[(99, vec)])
         q = emb.filter(F.col("vec_id").between(1, 3))
-        # k over the corpus: the unscored row is kept, null, ranked last
-        out = EXACT_SEARCHES[search](q, emb, 100)
-        assert _ranks_of(out, 99) == [(40, None)] * 3
+        # k over the corpus: an exact search keeps the unscored row, null, ranked last
+        assert _ranks_of(EXACT_SEARCHES[search](q, emb, 100), 99) == over_corpus
         # k below the scored candidates: the unscored row never makes it
         assert _ranks_of(EXACT_SEARCHES[search](q, emb, 3), 99) == []

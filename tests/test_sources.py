@@ -7,8 +7,9 @@ import os
 
 from pyspark.sql import functions as F
 
+from azure_data_engineering_spark import pipeline as P
 from azure_data_engineering_spark.sources.csv_pipe import read_pipe_csv, write_pipe_csv
-from azure_data_engineering_spark.sources.excel import ingest_excel, sanitize_basename, select_sheets
+from azure_data_engineering_spark.sources.excel import sanitize_basename, select_sheets, write_minimal_xlsx
 from azure_data_engineering_spark.sources.listing import list_files
 from azure_data_engineering_spark.sources.multimodal import decode_metadata, with_binary_payload
 
@@ -47,24 +48,41 @@ class TestExcelIngest:
         assert select_sheets(["A", "B", "C"], "B, C") == ["B", "C"]
         assert select_sheets(["A"], "missing") == []
 
-    def test_fan_out_naming_and_content(self, spark):
-        out = ingest_excel(spark, "/x/Src Book.xlsx", workbook_loader=lambda p: FAKE_BOOK)
+    def test_fan_out_naming_and_content(self, spark, tmp_path):
+        out = _ingest_sheets(spark, tmp_path, "Src Book.xlsx", FAKE_BOOK, sanitize=False)
         assert set(out) == {"SrcBook_Data", "SrcBook_Other"}
-        rows = [tuple(r) for r in out["SrcBook_Data"].collect()]
         # no header handling: the header row is data (HelperFunction.py:34-42)
-        assert ("h1", "h2") in rows
+        assert ("h1", "h2") in out["SrcBook_Data"]
 
-    def test_sanitize_opt_in(self, spark):
-        out = ingest_excel(spark, "/x/b.xlsx", sanitize=True, workbook_loader=lambda p: FAKE_BOOK)
-        rows = sorted(tuple(r) for r in out["b_Data"].collect())
+    def test_sanitize_opt_in(self, spark, tmp_path):
+        rows = _ingest_sheets(spark, tmp_path, "b.xlsx", FAKE_BOOK, sanitize=True)["b_Data"]
         assert ("ab", "cd") in rows  # comma and quote deleted
         assert ("x-y", "") in rows  # slash->dash, non-ascii stripped
 
-    def test_ragged_rows_padded(self, spark):
-        book = {"S": [["a"], ["b", "c"]]}
-        out = ingest_excel(spark, "/x/r.xlsx", workbook_loader=lambda p: book)
-        rows = sorted(tuple(r) for r in out["r_S"].collect())
-        assert rows == [("a", ""), ("b", "c")]
+    def test_ragged_rows_padded(self, spark, tmp_path):
+        out = _ingest_sheets(spark, tmp_path, "r.xlsx", {"S": [["a"], ["b", "c"]]}, sanitize=False)
+        assert out["r_S"] == [("a", ""), ("b", "c")]
+
+
+def _ingest_sheets(spark, tmp_path, name, book, sanitize):
+    """`book` as a real workbook `name` through the exceltocsv step:
+    {folder name: sorted rows of its pipe CSV, parsed by Python's csv
+    module so an empty cell reads back as "" (Spark's reader makes it
+    null)}."""
+    import csv
+    import glob
+
+    write_minimal_xlsx(str(tmp_path / name), book)
+    res = P.ingest_excel(spark, str(tmp_path / name), str(tmp_path / "out"), sanitize=sanitize)
+    assert res.ok, res.detail
+    out = {}
+    for sheet in res.detail["sheets"]:
+        rows = []
+        for part in glob.glob(str(tmp_path / "out" / sheet / "part-*")):
+            with open(part, newline="") as fh:
+                rows += [tuple(r) for r in csv.reader(fh, delimiter="|")]
+        out[sheet] = sorted(rows)
+    return out
 
 
 class TestExcelDistributed:
@@ -274,14 +292,11 @@ class TestStdlibXlsx:
         sheet = '<row><c r="A1" t="s"><v>0</v></c><c r="B1" t="s"><v>1</v></c></row>'
         assert _parse(sheet, shared) == [["漢字カンジ", "ab"]]
 
-    def test_driver_ingest_real_file(self, spark, tmp_path):
-        from azure_data_engineering_spark.sources.excel import write_minimal_xlsx
-
-        p = str(tmp_path / "Real Book.xlsx")
-        write_minimal_xlsx(p, {"Data": [["h1", "h2"], ["v1", "v2"]]})
-        out = ingest_excel(spark, p)  # no loader injected
-        rows = sorted(tuple(r) for r in out["RealBook_Data"].collect())
-        assert rows == [("h1", "h2"), ("v1", "v2")]
+    def test_pipeline_ingest_real_file(self, spark, tmp_path):
+        out = _ingest_sheets(
+            spark, tmp_path, "Real Book.xlsx", {"Data": [["h1", "h2"], ["v1", "v2"]]}, sanitize=True
+        )
+        assert out == {"RealBook_Data": [("h1", "h2"), ("v1", "v2")]}
 
     def test_distributed_ingest_real_files(self, spark, tmp_path):
         from azure_data_engineering_spark.sources.excel import (
