@@ -3,15 +3,16 @@
 The second scale path for similarity search (besides hyperplane LSH,
 operators/similarity.py): partition the corpus into nlist Voronoi
 cells around trained centroids, then probe only the nprobe cells
-closest to each query — the standard IVF-Flat recipe (Jégou et al.,
-"Product Quantization for Nearest Neighbor Search", IEEE TPAMI 2011;
-the non-quantized IVF-Flat variant).
+closest to each query (Jégou et al., "Product Quantization for Nearest
+Neighbor Search", IEEE TPAMI 2011). IVF-Flat scores probed cells
+exactly; IVF-PQ ranks them by product-quantized codes first.
 
 Spark-first shape:
-- training: pyspark.ml KMeans (fixed seed) on a sample — at 100 TB
-  train on a ~1M-row sample, never the full corpus;
+- training: numpy Lloyd on the driver over a bounded sample, the first
+  _MAX_TRAIN rows by id (no RNG, the same sample on every run) — at
+  100 TB train on a ~1M-row sample, never the full corpus;
 - assignment: centroids broadcast as literals; nearest-centroid is a
-  codegen expression (argmin over nlist dot products), no UDF;
+  codegen expression (argmax over nlist dot products), no UDF;
 - search: queries join the corpus on cell id (hash equi-join on a
   low-cardinality key — prefer nlist >> shuffle partitions at scale),
   exact cosine within the probed cells (the Arrow-batched kernel,
@@ -25,52 +26,63 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from azure_data_engineering_spark.functions.vectors import _cosine_pairs, dot
+from azure_data_engineering_spark.functions.vectors import _cosine_pairs, dot, l2_normalize
 from azure_data_engineering_spark.operators.similarity import _topk_pairs
+
+_MAX_TRAIN = 4096  # training sample rows (4096 x 64 doubles = 2 MB on the driver)
+_ITERS = 10  # Lloyd rounds per trained artifact
+_REFINE = 8  # IVF-PQ exact re-rank shortlist: _REFINE * k ADC candidates per query
+
+
+def _train_sample(corpus: DataFrame, vec_col: str, id_col: str) -> np.ndarray:
+    """The first _MAX_TRAIN rows by id_col as a float64 matrix. Rows
+    whose vector is null or has a non-finite component are skipped: one
+    NaN row would make its centroid NaN and pull every row into that
+    cell. Raises ValueError if no row is left."""
+    rows = (
+        corpus.select(F.col(vec_col).alias("__v"), F.col(id_col).alias("__id"))
+        .orderBy("__id")
+        .limit(_MAX_TRAIN)
+        .select("__v")
+        .collect()
+    )
+    X = [np.asarray(r[0], dtype=np.float64) for r in rows if r[0] is not None]
+    X = [x for x in X if np.isfinite(x).all()]
+    if not X:
+        raise ValueError("no finite training vector in the corpus")
+    return np.stack(X)
+
+
+def _lloyd(X: np.ndarray, k: int) -> list[list[float]]:
+    """k centroids of X: _ITERS Lloyd rounds from k evenly spaced rows
+    (deterministic init); a cell left empty keeps its centroid."""
+    C = X[np.linspace(0, len(X) - 1, k).astype(int)].copy()
+    for _ in range(_ITERS):
+        a = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1).argmin(1)
+        for j in range(k):
+            pts = X[a == j]
+            if len(pts):
+                C[j] = pts.mean(0)
+    return [[float(x) for x in c] for c in C]
+
+
+def _unit_rows(X: np.ndarray) -> np.ndarray:
+    """Rows of X scaled to unit L2 norm, bit-identical to the Column
+    functions/vectors.l2_normalize the encoder applies: a sequential sum
+    of squares, and a row whose norm is 0 is returned unchanged."""
+    norm = np.sqrt(np.add.accumulate(X * X, axis=1)[:, -1:])
+    return np.divide(X, norm, out=X.copy(), where=norm != 0)
 
 
 def train_centroids(
     corpus: DataFrame,
     vec_col: str,
     nlist: int,
-    seed: int = 42,
     id_col: str = "vec_id",
-    max_train: int = 4096,
-    iters: int = 10,
 ) -> list[list[float]]:
-    """Coarse KMeans centroids from a BOUNDED deterministic sample —
-    the same sample-train discipline as train_pq_codebooks: pull
-    max_train rows ordered by id_col to the driver (4096 x 64 doubles
-    = 2 MB) and run numpy Lloyd with deterministic evenly-spaced init.
-    Driver holds nlist x dim floats — tiny; at 100 TB you fit nlist
-    coarse centroids on a ~1M-row sample, never the corpus.
-
-    r12: replaces pyspark.ml KMeans(maxIter=10).fit over the full
-    corpus — a kmeans||-init + 10-iteration cascade of ~25 scheduled
-    jobs whose output is a KB-sized artifact. The sample path is one
-    TakeOrdered job + driver numpy; recall through the trained cells
-    is re-verified by every ANN gate's floor. `seed` is kept for
-    call-site compatibility; the init is deterministic by construction
-    (sample order is pinned by id_col), so no RNG is consumed."""
-    sel = (
-        corpus.select(F.col(vec_col).alias("__v"), F.col(id_col).alias("__id"))
-        .orderBy("__id")
-        .limit(int(max_train))
-        .select("__v")
-    )
-    X = np.array([r["__v"] for r in sel.collect()], dtype=np.float64)
-    if len(X) == 0:
-        raise ValueError("train_centroids: empty corpus")
-    idx = np.linspace(0, len(X) - 1, nlist).astype(int)
-    C = X[idx].copy()
-    for _ in range(iters):
-        d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
-        a = d.argmin(1)
-        for j in range(nlist):
-            pts = X[a == j]
-            if len(pts):
-                C[j] = pts.mean(0)
-    return [[float(x) for x in c] for c in C]
+    """Coarse IVF centroids: Lloyd on the bounded training sample. The
+    driver holds nlist x dim floats — tiny."""
+    return _lloyd(_train_sample(corpus, vec_col, id_col), nlist)
 
 
 def _nearest_cells(vec: Column, centroids: list[list[float]], nprobe: int) -> Column:
@@ -133,64 +145,21 @@ def train_pq_codebooks(
     corpus: DataFrame,
     vec_col: str,
     dim: int,
-    id_col: str | None = None,
+    id_col: str = "vec_id",
     m: int = 8,
     ksub: int = 16,
-    iters: int = 10,
-    max_train: int = 4096,
 ) -> list[list[list[float]]]:
     """Per-subspace product-quantization codebooks (Jégou et al.,
     "Product Quantization for Nearest Neighbor Search", TPAMI 2011):
     the dim-D space splits into `m` subspaces of dim/m and each gets
-    its own ksub-centroid Lloyd codebook, fit on unit-normalized
-    vectors (inner product == cosine thereafter).
-
-    Training pulls a BOUNDED deterministic sample to the driver
-    (max_train rows ordered by id_col; 4096 x 64 doubles = 2 MB) and
-    runs numpy Lloyd with deterministic init (evenly-spaced sample
-    rows) — the standard recipe: at 100 TB you fit codebooks on a ~1M
-    row sample, never the corpus, and the resulting artifact is
-    driver-resident by design anyway (m*ksub*dim/m = ksub*dim floats,
-    a few KB, same footprint as the IVF coarse centroids)."""
-    from azure_data_engineering_spark.functions.vectors import l2_normalize
-
+    its own ksub-centroid Lloyd codebook, fit on the unit-normalized
+    training sample (inner product == cosine thereafter). The artifact
+    is ksub*dim floats, a few KB, like the coarse centroids."""
     if dim % m != 0:
         raise ValueError(f"dim={dim} not divisible by m={m}")
-    if id_col is None:
-        # ADVICE r4: limit() without an ordering is nondeterministic
-        # across runs/partitionings, which would silently break the
-        # module's determinism discipline (codebooks differ run to run).
-        raise ValueError(
-            "train_pq_codebooks requires id_col: the bounded driver sample "
-            "must be ordered to be deterministic across partitionings"
-        )
-    # limit FIRST on the raw (vec, id) projection, then normalize only
-    # the max_train survivors: TakeOrdered otherwise evaluates the
-    # interpreted normalize HOF over EVERY corpus row just to discard
-    # it (r12). Same rows, same doubles.
-    sel = (
-        corpus.select(F.col(vec_col).alias("__v"), F.col(id_col).alias("__id"))
-        .orderBy("__id")
-        .limit(int(max_train))
-        .select(l2_normalize(F.col("__v")).alias("v"))
-    )
-    rows = sel.collect()
-    X = np.array([r.v for r in rows], dtype=np.float64)
+    X = _unit_rows(_train_sample(corpus, vec_col, id_col))
     sub = dim // m
-    books: list[list[list[float]]] = []
-    for i in range(m):
-        S = X[:, i * sub : (i + 1) * sub]
-        idx = np.linspace(0, len(S) - 1, ksub).astype(int)
-        C = S[idx].copy()
-        for _ in range(iters):
-            d = ((S[:, None, :] - C[None, :, :]) ** 2).sum(-1)
-            a = d.argmin(1)
-            for j in range(ksub):
-                pts = S[a == j]
-                if len(pts):
-                    C[j] = pts.mean(0)
-        books.append([[float(x) for x in c] for c in C])
-    return books
+    return [_lloyd(X[:, i * sub : (i + 1) * sub], ksub) for i in range(m)]
 
 
 def _pq_encode_udf(codebooks):
@@ -200,11 +169,9 @@ def _pq_encode_udf(codebooks):
     justified-pandas-UDF case as similarity.hyperplane_buckets_arrow —
     a literal unrolled ksub*m expression tree is interpreted per-row
     by Catalyst HOFs and measured ~20x slower."""
-    from pyspark.sql.functions import pandas_udf
-
     books = [np.asarray(b, dtype=np.float64) for b in codebooks]
 
-    @pandas_udf("array<int>")
+    @F.pandas_udf("array<int>")
     def enc(vs: pd.Series) -> pd.Series:
         X = np.stack(vs.to_numpy())
         out = np.empty((X.shape[0], len(books)), dtype=np.int32)
@@ -223,11 +190,9 @@ def _adc_score_udf(codebooks):
     form): per batch and subspace, gather the coded codewords and
     row-wise dot them against the exact query subvectors
     (einsum) — vectorized lookup-table scoring, no per-row Python."""
-    from pyspark.sql.functions import pandas_udf
-
     books = [np.asarray(b, dtype=np.float64) for b in codebooks]
 
-    @pandas_udf("double")
+    @F.pandas_udf("double")
     def adc(qn: pd.Series, codes: pd.Series) -> pd.Series:
         Q = np.stack(qn.to_numpy())
         C = np.stack(codes.to_numpy()).astype(np.int64)
@@ -241,6 +206,50 @@ def _adc_score_udf(codebooks):
     return adc
 
 
+def _index_rows(df: DataFrame, centroids, codebooks, id_col: str, vec_col: str) -> DataFrame:
+    """IVF-PQ index rows (vec_id, cell, codes): each vector's nearest
+    coarse cell and the PQ codes of its unit-normalized form."""
+    enc = _pq_encode_udf(codebooks)
+    return df.select(
+        F.col(id_col).alias("vec_id"),
+        _nearest_cells(F.col(vec_col), centroids, 1)[0].alias("cell"),
+        enc(l2_normalize(F.col(vec_col))).alias("codes"),
+    )
+
+
+def _search(
+    queries, corpus, index, centroids, codebooks, id_col, vec_col, k, nprobe, round_digits
+) -> DataFrame:
+    """The IVF-PQ search over index rows (vec_id, cell, codes): each
+    query probes its nprobe nearest cells through one broadcast-query
+    equi-join on cell (never a cartesian) and ranks the candidates by
+    the ADC inner product against unit-normalized codewords. Only the
+    _REFINE*k shortlist joins back to the corpus BY ID for the exact
+    full-precision re-rank (functions/vectors._cosine_pairs): raw
+    vectors are touched for k' rows per query, not per candidate."""
+    adc = _adc_score_udf(codebooks)
+    idx = index.select(F.col("vec_id").alias("neighbor_id"), "cell", "codes")
+    q = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("q_vec"),
+        l2_normalize(F.col(vec_col)).alias("qn"),
+        F.explode(_nearest_cells(F.col(vec_col), centroids, nprobe)).alias("cell"),
+    )
+    cand = (
+        F.broadcast(q)
+        .join(idx, "cell")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("adc", adc(F.col("qn"), F.col("codes")))
+    )
+    w1 = Window.partitionBy("query_id").orderBy(F.col("adc").desc(), F.col("neighbor_id").asc())
+    shortlist = cand.withColumn("__r", F.row_number().over(w1)).filter(F.col("__r") <= _REFINE * k)
+    vecs = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
+    refined = shortlist.join(vecs, "neighbor_id").select(
+        "query_id", "neighbor_id", _cosine_pairs(F.col("q_vec"), F.col("c_vec")).alias("cosine")
+    )
+    return _topk_pairs(refined, "query_id", k, round_digits)
+
+
 def ivfpq_top_k(
     queries: DataFrame,
     corpus: DataFrame,
@@ -250,7 +259,6 @@ def ivfpq_top_k(
     vec_col: str = "embedding",
     k: int = 10,
     nprobe: int = 4,
-    refine_factor: int = 8,
     round_digits: int = 6,
 ) -> DataFrame:
     """IVF-PQ approximate top-k cosine — the 100 TB memory story for
@@ -258,51 +266,17 @@ def ivfpq_top_k(
     m bytes replacing 4*dim; dim=64 float32 is 256 B -> 8 code bytes
     + 1 cell byte, ~28x, so a 1e11-vector corpus whose raw vectors
     are 25.6 TB holds its searchable index in under 1 TB of executor
-    memory). Each query probes its nprobe nearest cells via the same
-    hash equi-join as IVF-Flat (never a cartesian), ranks candidates
-    by the ADC inner product against unit-normalized codewords, keeps
-    a refine_factor*k shortlist, and exactly re-ranks ONLY the
-    shortlist against the true vectors (the standard refine step:
-    full-precision vectors are touched for k' rows per query, not per
-    candidate).
+    memory). Encodes the corpus on the fly; ivfpq_search_index runs
+    the same search over a persisted index instead.
 
     Plan: one broadcast-query equi-join on cell, two window top-ks
-    (ADC shortlist, exact re-rank); encoding and ADC are Arrow-batched
-    numpy (see _pq_encode_udf), as is the exact re-rank
-    (functions/vectors._cosine_pairs); cell assignment stays in
-    codegen."""
-    from azure_data_engineering_spark.functions.vectors import l2_normalize
-
-    enc = _pq_encode_udf(codebooks)
-    adc = _adc_score_udf(codebooks)
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        _nearest_cells(F.col(vec_col), centroids, 1)[0].alias("cell"),
-        enc(l2_normalize(F.col(vec_col))).alias("codes"),
+    (ADC shortlist, exact re-rank) and one id join for the shortlist's
+    vectors; encoding, ADC and the re-rank are Arrow-batched numpy,
+    cell assignment stays in codegen."""
+    index = _index_rows(corpus, centroids, codebooks, id_col, vec_col)
+    return _search(
+        queries, corpus, index, centroids, codebooks, id_col, vec_col, k, nprobe, round_digits
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        l2_normalize(F.col(vec_col)).alias("qn"),
-        F.explode(_nearest_cells(F.col(vec_col), centroids, nprobe)).alias("cell"),
-    )
-    cand = (
-        F.broadcast(q)
-        .join(c, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("adc", adc(F.col("qn"), F.col("codes")))
-    )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id").asc()
-    )
-    shortlist = cand.withColumn("__r", F.row_number().over(w1)).filter(
-        F.col("__r") <= int(refine_factor) * k
-    )
-    refined = shortlist.select(
-        "query_id", "neighbor_id", _cosine_pairs(F.col("q_vec"), F.col("c_vec")).alias("cosine")
-    )
-    return _topk_pairs(refined, "query_id", k, round_digits)
 
 
 # ------------------------------------------------- incremental index
@@ -325,15 +299,9 @@ def ivf_index_build(
     100 TB shape: the index is ~17 bytes/vector (1 cell + m codes) —
     the only thing searches scan; raw vectors stay in the corpus
     table and are touched per-query only for the k' refine rows."""
-    from azure_data_engineering_spark.functions.vectors import l2_normalize
     from azure_data_engineering_spark.sources.snapshot import snapshot_write
 
-    enc = _pq_encode_udf(codebooks)
-    idx = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        _nearest_cells(F.col(vec_col), centroids, 1)[0].alias("cell"),
-        enc(l2_normalize(F.col(vec_col))).alias("codes"),
-    )
+    idx = _index_rows(corpus, centroids, codebooks, id_col, vec_col)
     return snapshot_write(idx, index_table, mode="overwrite")
 
 
@@ -357,29 +325,18 @@ def ivf_index_append(
     Codebook staleness is the operational trade: appended vectors from
     a drifted distribution still land in their nearest FROZEN cell and
     quantize against frozen codewords, so recall degrades gracefully
-    rather than failing (tests/test_ivf.py asserts the floor holds on
-    a deliberately drifted batch); the periodic re-train + rebuild is
-    an offline job that swaps in a fresh index via an `overwrite`
-    snapshot commit without pausing readers (time travel keeps the old
-    version readable until vacuum).
+    rather than failing (tests/test_ivf_append.py asserts the floor
+    holds on a deliberately drifted batch); the periodic re-train +
+    rebuild is an offline job that swaps in a fresh index via an
+    `overwrite` snapshot commit without pausing readers (time travel
+    keeps the old version readable until vacuum).
 
     Returns the committed snapshot version."""
-    from azure_data_engineering_spark.functions.vectors import l2_normalize
-    from azure_data_engineering_spark.sources.snapshot import (
-        snapshot_read,
-        snapshot_write,
-    )
+    from azure_data_engineering_spark.sources.snapshot import snapshot_read, snapshot_write
 
-    enc = _pq_encode_udf(codebooks)
-    spark = new_rows.sparkSession
-    existing = snapshot_read(spark, index_table).select("vec_id")
-    batch = (
-        new_rows.select(
-            F.col(id_col).alias("vec_id"),
-            _nearest_cells(F.col(vec_col), centroids, 1)[0].alias("cell"),
-            enc(l2_normalize(F.col(vec_col))).alias("codes"),
-        )
-        .join(existing, "vec_id", "left_anti")
+    existing = snapshot_read(new_rows.sparkSession, index_table).select("vec_id")
+    batch = _index_rows(new_rows, centroids, codebooks, id_col, vec_col).join(
+        existing, "vec_id", "left_anti"
     )
     return snapshot_write(batch, index_table, mode="append")
 
@@ -394,45 +351,17 @@ def ivfpq_search_index(
     vec_col: str = "embedding",
     k: int = 10,
     nprobe: int = 4,
-    refine_factor: int = 8,
     round_digits: int = 6,
     version: int | None = None,
 ) -> DataFrame:
     """IVF-PQ top-k against the PERSISTED index (ivf_index_build /
-    ivf_index_append): queries broadcast-equi-join the index on cell,
-    rank by Arrow-batched ADC, then the refine_factor*k shortlist —
-    and only it — joins back to the corpus BY ID for the exact
-    full-precision re-rank. Identical ranking math to ivfpq_top_k
-    (same ADC + refine), but the candidate side scans 17-byte index
-    rows instead of recomputing codes from raw vectors, which is the
-    whole point of maintaining the index incrementally."""
-    from azure_data_engineering_spark.functions.vectors import l2_normalize
+    ivf_index_append) at `version` (latest if None): the ivfpq_top_k
+    search, but the candidate side scans 17-byte index rows instead of
+    recomputing codes from raw vectors, which is the whole point of
+    maintaining the index incrementally."""
     from azure_data_engineering_spark.sources.snapshot import snapshot_read
 
-    adc = _adc_score_udf(codebooks)
-    idx = snapshot_read(queries.sparkSession, index_table, version=version).select(
-        F.col("vec_id").alias("neighbor_id"), "cell", "codes"
+    index = snapshot_read(queries.sparkSession, index_table, version=version)
+    return _search(
+        queries, corpus, index, centroids, codebooks, id_col, vec_col, k, nprobe, round_digits
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        l2_normalize(F.col(vec_col)).alias("qn"),
-        F.explode(_nearest_cells(F.col(vec_col), centroids, nprobe)).alias("cell"),
-    )
-    cand = (
-        F.broadcast(q)
-        .join(idx, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("adc", adc(F.col("qn"), F.col("codes")))
-    )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id").asc()
-    )
-    shortlist = cand.withColumn("__r", F.row_number().over(w1)).filter(
-        F.col("__r") <= int(refine_factor) * k
-    )
-    vecs = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-    refined = shortlist.join(vecs, "neighbor_id").select(
-        "query_id", "neighbor_id", _cosine_pairs(F.col("q_vec"), F.col("c_vec")).alias("cosine")
-    )
-    return _topk_pairs(refined, "query_id", k, round_digits)

@@ -2,7 +2,7 @@
 
 The third iterative fixed-point in the engine (with connected
 components and PageRank): unlike operators/ivf.train_centroids —
-which fits pyspark.ml KMeans on a driver-visible SAMPLE because IVF
+which runs numpy Lloyd on a bounded driver-side SAMPLE because IVF
 only needs approximate cells — this is the full Lloyd training loop
 run distributed end to end: the corpus never leaves executors and the
 only driver-resident state is the query plan. In curation pipelines

@@ -8,8 +8,8 @@ ONLY inside each cluster — the quadratic term shrinks from n² to
 Σ|cluster|², tunable via the cluster count.
 
 Spark-first shape (reusing the IVF machinery in operators/ivf.py):
-- centroids: pyspark.ml KMeans on a sample, fixed seed — the driver
-  holds nlist×dim floats, never corpus rows;
+- centroids: ivf.train_centroids, numpy Lloyd on a bounded id-ordered
+  sample — the driver holds nlist×dim floats, never corpus rows;
 - assignment: nearest-centroid argmin as a pure codegen expression
   over broadcast literal centroids (no UDF, no shuffle);
 - pair search: ONE hash self-join on the cell id — work per cluster

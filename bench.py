@@ -571,7 +571,7 @@ def _operator_only(spark, sf_dir: str) -> dict[str, float]:
         cents = books = None
     if cents is not None:
         _put(out, "ann_ivfpq_op", lambda: ivfpq_top_k(
-            q, emb, cents, books, k=3, nprobe=4, refine_factor=8))
+            q, emb, cents, books, k=3, nprobe=4))
     # ENCODE-ONLY BPE against a persisted merge artifact (judge r4
     # ask 5): q_bpe_encode's headline cost is dominated by re-running
     # the 12 TRAINING rounds inside the query; production encodes load

@@ -2,12 +2,23 @@
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
 from pyspark.sql import functions as F
 
 from azure_data_engineering_spark.catalog import load_table
-from azure_data_engineering_spark.operators.ivf import ivf_top_k, train_centroids
+from azure_data_engineering_spark.functions.vectors import l2_normalize
+from azure_data_engineering_spark.operators.ivf import (
+    _nearest_cells,
+    _unit_rows,
+    ivf_index_build,
+    ivf_top_k,
+    ivfpq_search_index,
+    ivfpq_top_k,
+    train_centroids,
+    train_pq_codebooks,
+)
 from azure_data_engineering_spark.operators.similarity import brute_force_top_k
 
 
@@ -43,20 +54,41 @@ class TestIvf:
         narrow = ivf_top_k(q, emb, centroids, k=500, nprobe=1).count()
         assert narrow < wide
 
+    def test_unfit_sample_rows_are_skipped(self, spark, sf_dir):
+        """A NaN component or a null vector in the training sample is
+        skipped: one NaN row once turned its centroid NaN and drew every
+        row into that cell, and a null vector broke the sample matrix."""
+        emb = load_table(spark, sf_dir, "embeddings")
+        first = emb.filter(F.col("vec_id") == 0)
+        id_type, vec_type = emb.schema["vec_id"].dataType, emb.schema["embedding"].dataType
+        nan_row = first.withColumn("vec_id", F.lit(-1).cast(id_type)).withColumn(
+            "embedding",
+            F.transform("embedding", lambda x, i: F.when(i == 3, F.lit(float("nan"))).otherwise(x))
+            .cast(vec_type),
+        )
+        null_row = first.withColumn("vec_id", F.lit(-2).cast(id_type)).withColumn(
+            "embedding", F.lit(None).cast(vec_type)
+        )
+        cents = train_centroids(emb.unionByName(nan_row).unionByName(null_row), "embedding", nlist=8)
+        assert all(x == x and abs(x) != float("inf") for c in cents for x in c)
+        cells = emb.select(_nearest_cells(F.col("embedding"), cents, 1)[0].alias("cell"))
+        assert cells.distinct().count() > 1
+
+    def test_empty_corpus_raises(self, spark, sf_dir):
+        emb = load_table(spark, sf_dir, "embeddings").limit(0)
+        with pytest.raises(ValueError, match="no finite training vector"):
+            train_pq_codebooks(emb, "embedding", dim=64, id_col="vec_id")
+
 
 class TestIvfPq:
     @pytest.fixture(scope="class")
     def books(self, spark, sf_dir):
-        from azure_data_engineering_spark.operators.ivf import train_pq_codebooks
-
         emb = load_table(spark, sf_dir, "embeddings")
         return train_pq_codebooks(
             emb, "embedding", dim=64, id_col="vec_id", m=16, ksub=32
         )
 
     def test_codebook_shape_and_determinism(self, spark, sf_dir, books):
-        from azure_data_engineering_spark.operators.ivf import train_pq_codebooks
-
         assert len(books) == 16
         assert all(len(b) == 32 and all(len(c) == 4 for c in b) for b in books)
         again = train_pq_codebooks(
@@ -65,10 +97,21 @@ class TestIvfPq:
         )
         assert books == again
 
+    def test_sample_normalization_matches_l2_normalize(self, spark):
+        """The codebooks are fit on a numpy-normalized sample; it must
+        equal, bit for bit, the l2_normalize column the encoder sees."""
+        X = np.random.default_rng(7).normal(size=(40, 16)).astype(np.float32).astype(np.float64)
+        X[0] = 0.0
+        X[1] *= 1e-170  # the squares underflow: a zero norm on a nonzero row
+        df = spark.createDataFrame(
+            [(i, [float(x) for x in r]) for i, r in enumerate(X)], "i int, v array<double>"
+        )
+        want = [r.u for r in df.orderBy("i").select(l2_normalize(F.col("v")).alias("u")).collect()]
+        assert _unit_rows(X).tolist() == want
+
     def test_codes_are_m_bytes(self, spark, sf_dir, books):
         """The index artifact per vector is exactly m small ints —
         the 16x compression claim for dim=64 float32."""
-        from azure_data_engineering_spark.functions.vectors import l2_normalize
         from azure_data_engineering_spark.operators.ivf import _pq_encode_udf
 
         emb = load_table(spark, sf_dir, "embeddings").limit(50)
@@ -79,8 +122,6 @@ class TestIvfPq:
             assert all(0 <= c < 32 for c in r.codes)
 
     def test_recall_vs_brute_force(self, spark, sf_dir, centroids, books):
-        from azure_data_engineering_spark.operators.ivf import ivfpq_top_k
-
         emb = load_table(spark, sf_dir, "embeddings")
         q = emb.filter(F.col("vec_id") < 20)
         exact = {
@@ -89,9 +130,7 @@ class TestIvfPq:
         }
         approx = {
             (r["query_id"], r["neighbor_id"])
-            for r in ivfpq_top_k(
-                q, emb, centroids, books, k=3, nprobe=4, refine_factor=8
-            ).collect()
+            for r in ivfpq_top_k(q, emb, centroids, books, k=3, nprobe=4).collect()
         }
         recall = len(exact & approx) / len(exact)
         assert recall >= 0.6, f"IVF-PQ recall {recall}"
@@ -100,7 +139,6 @@ class TestIvfPq:
         """Output cosine must equal the TRUE rounded cosine (the
         refine step uses full-precision vectors, not ADC scores)."""
         from azure_data_engineering_spark.functions.vectors import cosine_similarity
-        from azure_data_engineering_spark.operators.ivf import ivfpq_top_k
 
         emb = load_table(spark, sf_dir, "embeddings")
         q = emb.filter(F.col("vec_id") < 5)
@@ -117,3 +155,16 @@ class TestIvfPq:
         ).collect()
         for r in chk:
             assert r.cosine == r.truth
+
+    def test_index_search_matches_on_the_fly_search(self, spark, sf_dir, centroids, books, tmp_path):
+        """ivfpq_top_k and ivfpq_search_index are one search: over the
+        same corpus they return the same rows."""
+        emb = load_table(spark, sf_dir, "embeddings")
+        q = emb.filter(F.col("vec_id") < 5)
+        table = str(tmp_path / "idx")
+        ivf_index_build(emb, centroids, books, table)
+        on_the_fly = ivfpq_top_k(q, emb, centroids, books, k=3).collect()
+        indexed = ivfpq_search_index(q, emb, centroids, books, table, k=3).collect()
+        key = lambda r: (r.query_id, r.rank)  # noqa: E731
+        assert sorted(on_the_fly, key=key) == sorted(indexed, key=key)
+        assert len(on_the_fly) == 15

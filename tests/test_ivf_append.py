@@ -61,9 +61,7 @@ class TestIvfAppend:
             "vec_id", F.col("vec_id") + F.lit(10_000_000)
         )
         corpus = emb.unionByName(probes)
-        res = ivfpq_search_index(
-            probes, corpus, cent, books, table, k=1, nprobe=2, refine_factor=8
-        ).collect()
+        res = ivfpq_search_index(probes, corpus, cent, books, table, k=1, nprobe=2).collect()
         top = {r.query_id: r.neighbor_id for r in res}
         for qid, nid in top.items():
             assert nid == qid - 10_000_000  # its own appended twin
@@ -86,9 +84,7 @@ class TestIvfAppend:
         ivf_index_append(drifted, cent, books, table)
         corpus = base.select("vec_id", "embedding").unionByName(drifted)
         q = drifted.filter(F.col("vec_id") < 20_000_020)
-        ann = ivfpq_search_index(
-            q, corpus, cent, books, table, k=3, nprobe=4, refine_factor=8
-        )
+        ann = ivfpq_search_index(q, corpus, cent, books, table, k=3, nprobe=4)
         bf = brute_force_top_k(q, corpus, k=3, round_digits=6)
         ok = _ann_recall_frame(ann, bf, floor=0.5).first()
         assert ok.recall_ok, "recall collapsed after drifted append"
