@@ -22,7 +22,20 @@ from pyspark.sql import functions as F
 from azure_data_engineering_spark.functions.text import normalize_text
 
 
-def _ensure_parallelism(df: DataFrame, target: int | None = None) -> DataFrame:
+# The band format (word k-shingles -> MinHash lanes -> bands) of the
+# persisted signature store (streaming/dedup_stream.py): batch
+# candidates and history probes MUST use identical band math, or a
+# store probed with other values than it was written with misses every
+# history duplicate without any error. 64 lanes in 16 bands (r = 4)
+# put the LSH S-curve threshold at (1/16)^(1/4) ≈ 0.5 Jaccard.
+_NUM_HASHES = 64
+_BANDS = 16
+_SHINGLE_K = 3
+# in-bucket pair expansion cap (minhash_lsh_candidates, streaming dedup)
+_MAX_BUCKET = 1000
+
+
+def _ensure_parallelism(df: DataFrame) -> DataFrame:
     """CPU-heavy per-row stages (shingling, hashing) need enough input
     partitions. A 100 TB table has thousands of file splits so this is
     a no-op; a small local file arrives as ONE partition and would pin
@@ -33,8 +46,7 @@ def _ensure_parallelism(df: DataFrame, target: int | None = None) -> DataFrame:
     Fewer files than cores -> repartition; shuffled/in-memory inputs
     (no leaf files) are already sized by spark.sql.shuffle.partitions /
     parallelize and pass through."""
-    sc = df.sparkSession.sparkContext
-    target = target or sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     n_files = len(df.inputFiles())
     if 0 < n_files < target:
         return df.repartition(target)
@@ -52,38 +64,66 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
+def _kgrams(units: Column, k: int, sep: str) -> Column:
+    """Distinct k-grams of an array of units, each joined by `sep`.
+
+    Built as a zip_with chain over k shifted slices — O(n) per doc.
+    (A transform(sequence(i), slice(units, i, k)) formulation is
+    O(n²) AND interpreted — higher-order lambdas don't codegen — which
+    measured 15x slower.) Arrays shorter than k yield one partial
+    k-gram (concat_ws skips the null pads from zip_with)."""
+    m = F.greatest(F.size(units) - (k - 1), F.lit(1))
+    out = F.slice(units, 1, m)
+    for j in range(1, k):
+        out = F.zip_with(out, F.slice(units, j + 1, m), lambda x, y: F.concat_ws(sep, x, y))
+    return F.array_distinct(out)
+
+
 def char_shingles(text: Column, k: int = 5) -> Column:
     """Character k-grams of normalized text, distinct — the
     word-shingle alternative for languages without whitespace
-    tokenization (zh/ja) or very short texts. Same zip_with O(n)
-    construction over the character array."""
-    chars = F.split(normalize_text(text), "")
-    n = F.size(chars)
-    m = F.greatest(n - (k - 1), F.lit(1))
-    out = F.slice(chars, 1, m)
-    for j in range(1, k):
-        out = F.zip_with(out, F.slice(chars, j + 1, m), lambda x, y: F.concat_ws("", x, y))
-    return F.array_distinct(out)
+    tokenization (zh/ja) or very short texts."""
+    return _kgrams(F.split(normalize_text(text), ""), k, "")
 
 
 def shingles(text: Column, k: int = 3) -> Column:
-    """Word k-shingles of normalized text, distinct, as array<string>.
-
-    Built as a zip_with chain over k shifted slices — O(n) per doc.
-    (A transform(sequence(i), slice(words, i, k)) formulation is
-    O(n²) AND interpreted — higher-order lambdas don't codegen — which
-    measured 15x slower.) Documents shorter than k words yield one
-    partial shingle (concat_ws skips the null pads from zip_with)."""
-    words = F.split(normalize_text(text), " ")
-    n = F.size(words)
-    m = F.greatest(n - (k - 1), F.lit(1))
-    out = F.slice(words, 1, m)
-    for j in range(1, k):
-        out = F.zip_with(out, F.slice(words, j + 1, m), lambda x, y: F.concat_ws(" ", x, y))
-    return F.array_distinct(out)
+    """Word k-shingles of normalized text, distinct, as array<string>."""
+    return _kgrams(F.split(normalize_text(text), " "), k, " ")
 
 
-def minhash_signatures(df: DataFrame, text_col: str, id_col: str, num_hashes: int = 64, k: int = 3) -> DataFrame:
+def _shingle_sets(df: DataFrame, text_col: str, id_col: str, k: int, unit: str) -> DataFrame:
+    """(id, sh, n_sh): each doc's distinct word (unit="word") or
+    character k-grams and their count."""
+    mk = shingles if unit == "word" else char_shingles
+    return (
+        _ensure_parallelism(df.select(id_col, text_col))
+        .select(F.col(id_col).alias("id"), mk(F.col(text_col), k).alias("sh"))
+        .withColumn("n_sh", F.size("sh"))
+    )
+
+
+def _common_counts(ex: DataFrame, cond: Column | None = None) -> DataFrame:
+    """Inverted-index intersection of exploded shingle rows (id, n_sh,
+    s): self-join on the shingle (a.id < b.id, plus `cond` on the "a" /
+    "b" sides) and count shared shingles per pair. Returns (id_a, id_b,
+    na, nb, n_common)."""
+    a, b = ex.alias("a"), ex.alias("b")
+    on = (F.col("a.s") == F.col("b.s")) & (F.col("a.id") < F.col("b.id"))
+    if cond is not None:
+        on = on & cond
+    return (
+        a.join(b, on)
+        .groupBy(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            F.col("a.n_sh").alias("na"),
+            F.col("b.n_sh").alias("nb"),
+        )
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+
+
+def minhash_signatures(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, signature: array<bigint>) — one row per input row.
 
     Each shingle string is hashed ONCE (xxhash64); lane j re-keys that
@@ -101,43 +141,35 @@ def minhash_signatures(df: DataFrame, text_col: str, id_col: str, num_hashes: in
     groupBy shuffles only (id, 64 longs) after map-side partial
     min-combine."""
     ex = _ensure_parallelism(df.select(id_col, text_col)).select(
-        F.col(id_col), F.explode(shingles(F.col(text_col), k)).alias("__s")
+        F.col(id_col), F.explode(shingles(F.col(text_col), _SHINGLE_K)).alias("__s")
     ).withColumn("__h", F.xxhash64("__s"))
     aggs = [
         F.min(F.xxhash64(F.lit(j).cast("bigint"), F.col("__h"))).alias(f"__m{j}")
-        for j in range(num_hashes)
+        for j in range(_NUM_HASHES)
     ]
     return (
         ex.groupBy(id_col)
         .agg(*aggs)
-        .select(F.col(id_col), F.array(*[f"__m{j}" for j in range(num_hashes)]).alias("signature"))
+        .select(F.col(id_col), F.array(*[f"__m{j}" for j in range(_NUM_HASHES)]).alias("signature"))
     )
 
 
-def band_buckets(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 64,
-    bands: int = 16,
-    k: int = 3,
-) -> DataFrame:
+def band_buckets(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, band, band_hash) — each doc's minhash signature split into
-    `bands` groups of num_hashes/bands lanes, each group hashed to one
+    _BANDS groups of _NUM_HASHES/_BANDS lanes, each group hashed to one
     bucket key. The shared banding step behind minhash_lsh_candidates
     (in-corpus pairs) and streaming/dedup_stream (probe vs a persisted
-    store): both MUST use identical band math or history probes would
-    miss what batch candidates find. Band hashes are unrolled
-    statically (getItem + concat_ws + xxhash64 stay in codegen; a
-    transform/sequence lambda would be interpreted)."""
-    r = num_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, k)
+    store). Band hashes are unrolled statically (getItem + concat_ws +
+    xxhash64 stay in codegen; a transform/sequence lambda would be
+    interpreted)."""
+    r = _NUM_HASHES // _BANDS
+    sig = minhash_signatures(df, text_col, id_col)
     band_hashes = F.array(
         *[
             F.xxhash64(
                 F.concat_ws(",", *[F.col("signature")[b * r + i].cast("string") for i in range(r)])
             )
-            for b in range(bands)
+            for b in range(_BANDS)
         ]
     )
     return sig.select(
@@ -145,35 +177,10 @@ def band_buckets(
     )
 
 
-def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 64,
-    bands: int = 16,
-    k: int = 3,
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """LSH banding: split each signature into `bands` groups of
-    rows-per-band hashes, hash each band, and emit all id pairs within
-    each (band, band_hash) bucket. Returns candidate pairs
-    (id_a < id_b).
-
-    Shape: ONE signature computation → ONE shuffle (groupBy on the
-    band-bucket key) → in-bucket pair expansion. (A self-join
-    formulation computes the signature pipeline twice — Catalyst does
-    not reuse the exchange across the a.id<b.id asymmetry.) Candidate
-    generation is linear in corpus size, never O(n²). With
-    num_hashes=64, bands=16 (r=4) the S-curve threshold is
-    (1/16)^(1/4) ≈ 0.5 Jaccard.
-
-    max_bucket guards the quadratic in-bucket expansion: a bucket of
-    exact duplicates yields |bucket|² pairs — run exact_dedup FIRST,
-    and mega-buckets beyond the cap are dropped as stop-buckets (the
-    standard skew guard; at 100 TB a hot bucket is a stop-shingle
-    analog, not signal).
-    """
-    banded = band_buckets(df, text_col, id_col, num_hashes, bands, k)
+def _bucket_pairs(banded: DataFrame, max_bucket: int) -> DataFrame:
+    """Distinct (id_a, id_b), id_a < id_b, of every pair of docs that
+    share a (band, band_hash) bucket of `banded`; buckets of more than
+    max_bucket docs are dropped as stop-buckets."""
     buckets = (
         banded.groupBy("band", "band_hash")
         .agg(F.array_sort(F.collect_set("id")).alias("ids"))
@@ -196,19 +203,41 @@ def minhash_lsh_candidates(
     )
 
 
+def minhash_lsh_candidates(
+    df: DataFrame, text_col: str, id_col: str, max_bucket: int = _MAX_BUCKET
+) -> DataFrame:
+    """LSH banding: split each signature into _BANDS groups of
+    rows-per-band hashes, hash each band, and emit all id pairs within
+    each (band, band_hash) bucket. Returns candidate pairs
+    (id_a < id_b).
+
+    Shape: ONE signature computation → ONE shuffle (groupBy on the
+    band-bucket key) → in-bucket pair expansion. (A self-join
+    formulation computes the signature pipeline twice — Catalyst does
+    not reuse the exchange across the a.id<b.id asymmetry.) Candidate
+    generation is linear in corpus size, never O(n²).
+
+    max_bucket guards the quadratic in-bucket expansion: a bucket of
+    exact duplicates yields |bucket|² pairs — run exact_dedup FIRST,
+    and mega-buckets beyond the cap are dropped as stop-buckets (the
+    standard skew guard; at 100 TB a hot bucket is a stop-shingle
+    analog, not signal).
+    """
+    return _bucket_pairs(band_buckets(df, text_col, id_col), max_bucket)
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str,
     id_col: str,
     threshold: float,
     k: int = 3,
-    block_col: str | None = None,
     unit: str = "word",
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via shingle inverted index:
-    explode shingles, self-join on shingle (optionally within a
-    blocking column), count intersections, and compute
-    |A∩B| / (|A|+|B|-|A∩B|) >= threshold. Returns (id_a, id_b, jaccard).
+    explode shingles, self-join on shingle, count intersections, and
+    compute |A∩B| / (|A|+|B|-|A∩B|) >= threshold. Returns (id_a, id_b,
+    jaccard).
 
     Scale: the explode+join is an inverted index — each shingle bucket
     joins only docs sharing that shingle. Hot shingles are the skew
@@ -216,34 +245,14 @@ def ngram_jaccard_pairs(
     or use minhash_lsh_candidates as the pre-filter and this as the
     verify stage on candidates only.
     """
-    mk = shingles if unit == "word" else char_shingles
-    base = _ensure_parallelism(
-        df.select(id_col, text_col, *([block_col] if block_col else []))
-    ).select(
-        F.col(id_col).alias("id"), mk(F.col(text_col), k).alias("sh"),
-        *([F.col(block_col).alias("blk")] if block_col else []),
-    ).withColumn("n_sh", F.size("sh"))
-    ex = base.select("id", "n_sh", *(["blk"] if block_col else []), F.explode("sh").alias("s"))
-    a, b = ex.alias("a"), ex.alias("b")
-    cond = (F.col("a.s") == F.col("b.s")) & (F.col("a.id") < F.col("b.id"))
+    base = _shingle_sets(df, text_col, id_col, k, unit)
+    ex = base.select("id", "n_sh", F.explode("sh").alias("s"))
     # length-ratio prune (exact, not heuristic): J >= t implies
     # min(|A|,|B|)/max(|A|,|B|) >= t, so pairs violating
     # t*max <= min can never reach the threshold — cuts the inverted-
     # index pair blowup before the intersection groupBy shuffle
     na, nb = F.col("a.n_sh"), F.col("b.n_sh")
-    cond = cond & (F.greatest(na, nb) * threshold <= F.least(na, nb))
-    if block_col:
-        cond = cond & (F.col("a.blk") == F.col("b.blk"))
-    inter = (
-        a.join(b, cond)
-        .groupBy(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.n_sh").alias("na"),
-            F.col("b.n_sh").alias("nb"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
+    inter = _common_counts(ex, F.greatest(na, nb) * threshold <= F.least(na, nb))
     return (
         inter.withColumn("jaccard", F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common")))
         .filter(F.col("jaccard") >= threshold)
@@ -321,7 +330,7 @@ def hamming_near_dups(
     return cand
 
 
-def simhash(df: DataFrame, text_col: str, bits: int = 64) -> DataFrame:
+def simhash(df: DataFrame, text_col: str) -> DataFrame:
     """Append `simhash: bigint` (Charikar): per bit position, sum +1/-1
     votes of xxhash64(token) bits across tokens; sign -> bit. Near-dups
     have small Hamming distance.
@@ -332,7 +341,7 @@ def simhash(df: DataFrame, text_col: str, bits: int = 64) -> DataFrame:
     variable shifts, no ANSI overflow). All codegen; pair search then
     blocks on bit-prefixes or uses the minhash LSH path."""
     masks = F.array(
-        *[F.lit((1 << i) if i < 63 else -(1 << 63)).cast("bigint") for i in range(bits)]
+        *[F.lit((1 << i) if i < 63 else -(1 << 63)).cast("bigint") for i in range(64)]
     )
     df = _ensure_parallelism(df)
     toks = F.array_distinct(F.split(normalize_text(F.col(text_col)), " "))
@@ -374,8 +383,8 @@ def duplicated_span_stats(
     equivalent):
       1. tokenize + per-row window enumeration in pure codegen
          (split → sequence → explode → slice → md5) — no shuffle;
-      2. ONE hash shuffle on the gram key via groupBy(count,
-         min(struct(doc,pos))) — map-side partial aggregation
+      2. ONE hash shuffle on the gram key via groupBy(count, min of
+         the packed (doc, pos) key) — map-side partial aggregation
          collapses stop-grams BEFORE the exchange, so a gram
          repeated 10^6 times ships one partial row per task, not
          10^6 rows (the skew-safety a window-function formulation
@@ -405,17 +414,18 @@ def duplicated_span_stats(
         F.explode(starts).alias("pos"),
         F.md5(F.concat_ws(" ", F.slice(F.col("t"), F.col("pos"), k))).alias("gh"),
     )
-    # first-occurrence key packed into ONE bigint: doc_id*1e7 + pos is
-    # lexicographic (doc, pos) order as long as a document has < 10^7
-    # tokens (a 10M-token doc is ~40MB of text — far beyond any sane
-    # training document; assert the bound instead of corrupting).
-    # Packing matters twice: a plain-integer min keeps the aggregate
+    # first-occurrence key packed into ONE decimal(38,0): doc_id*1e7 +
+    # pos is lexicographic (doc, pos) order as long as a document has
+    # < 10^7 tokens (a 10M-token doc is ~40MB of text — far beyond any
+    # sane training document; assert the bound instead of corrupting).
+    # Packing matters twice: a plain-number min keeps the aggregate
     # HASH-based (a struct min forces SortAggregate in Spark and is
     # pathologically slow in some engines), and the packed compare
-    # replays bit-identically in ANSI SQL.
-    # cast BEFORE the multiply: an int id column would overflow the
-    # int product under ANSI mode before any outer cast applies
-    packed = F.col("doc_id").cast("bigint") * F.lit(10_000_000) + F.col("pos").cast("bigint")
+    # replays bit-identically in ANSI SQL. decimal(38,0), not bigint:
+    # any 64-bit id (xxhash64 doc ids) times 1e7 fits in 38 digits, where
+    # a bigint product overflows once |doc_id| exceeds ~9.2e11. Cast
+    # BEFORE the multiply, so an int id cannot overflow an int product.
+    packed = F.col("doc_id").cast("decimal(38,0)") * F.lit(10_000_000) + F.col("pos")
     per_gram = (
         hashed.groupBy("gh")
         .agg(
@@ -501,11 +511,8 @@ def ppjoin_pairs(
     does). Pairs sharing any sub-max_bucket prefix shingle are
     unaffected (tests/test_dedup_skew.TestPpjoinStopShingle).
     """
-    mk = shingles if unit == "word" else char_shingles
     base = (
-        _ensure_parallelism(df.select(id_col, text_col))
-        .select(F.col(id_col).alias("id"), mk(F.col(text_col), k).alias("sh"))
-        .withColumn("n_sh", F.size("sh"))
+        _shingle_sets(df, text_col, id_col, k, unit)
         .filter(F.col("n_sh") > 0)
         # materialize once (r12): base feeds the freq agg, the ranked
         # join, AND both verify sides — four consumers whose joins are
@@ -597,11 +604,7 @@ def containment_pairs(
     prune applies (the big side may be arbitrarily large — that is
     the point). Returns (id_small, id_big, containment).
     """
-    mk = shingles if unit == "word" else char_shingles
-    base = (
-        _ensure_parallelism(df.select(id_col, text_col))
-        .select(F.col(id_col).alias("id"), mk(F.col(text_col), k).alias("sh"))
-    )
+    base = _shingle_sets(df, text_col, id_col, k, unit)
     ex = base.select("id", F.explode("sh").alias("s"))
     if max_df is not None:
         dfreq = ex.groupBy("s").agg(F.count(F.lit(1)).alias("__df"))
@@ -617,24 +620,14 @@ def containment_pairs(
     ex = ex.withColumn(
         "n_sh", F.count(F.lit(1)).over(Window.partitionBy("id"))
     )
-    a, b = ex.alias("a"), ex.alias("b")
-    inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(
-            F.col("a.id").alias("ia"),
-            F.col("b.id").alias("ib"),
-            F.col("a.n_sh").alias("na"),
-            F.col("b.n_sh").alias("nb"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
+    inter = _common_counts(ex)
     # orient: small side is the contained candidate (tie -> lower id)
     small_first = (F.col("na") < F.col("nb")) | (
-        (F.col("na") == F.col("nb")) & (F.col("ia") < F.col("ib"))
+        (F.col("na") == F.col("nb")) & (F.col("id_a") < F.col("id_b"))
     )
     oriented = inter.select(
-        F.when(small_first, F.col("ia")).otherwise(F.col("ib")).alias("id_small"),
-        F.when(small_first, F.col("ib")).otherwise(F.col("ia")).alias("id_big"),
+        F.when(small_first, F.col("id_a")).otherwise(F.col("id_b")).alias("id_small"),
+        F.when(small_first, F.col("id_b")).otherwise(F.col("id_a")).alias("id_big"),
         F.when(small_first, F.col("na")).otherwise(F.col("nb")).alias("n_small"),
         F.col("n_common"),
     )

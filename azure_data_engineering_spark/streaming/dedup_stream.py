@@ -17,17 +17,18 @@ per band. The history probe is then a plain equi-join on
 (band, band_hash): no array ops, broadcast-able when the batch is
 small, and at 100 TB the store is just a big parquet table the join
 shuffles on its bucket key. Candidate semantics inherit the LSH S-curve of
-minhash_lsh_candidates (num_hashes/bands): ~0.5 Jaccard threshold at
-64/16.
+minhash_lsh_candidates (operators/dedup._NUM_HASHES/_BANDS): ~0.5
+Jaccard threshold at 64/16.
 
 Scale notes:
 - per batch: one signature pipeline (explode→hash→64 codegen min-aggs,
-  operators/dedup.py), one join against the store, one append-only
+  operators/dedup.band_buckets), materialized once and shared by the
+  intra-batch pairs, one join against the store and one append-only
   snapshot commit of the survivors' bucket rows (O(batch), never
   rewrites history);
 - intra-batch duplicates resolve deterministically (min id wins) via
-  minhash_lsh_candidates on the batch alone, so a batch full of copies
-  admits exactly one;
+  the in-bucket pairs of the batch's own buckets, so a batch full of
+  copies admits exactly one;
 - exact copies share identical signatures, hence all bands collide —
   exact dedup is subsumed;
 - crash safety = the snapshot commit protocol: a batch that dies
@@ -47,8 +48,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from azure_data_engineering_spark.operators.dedup import (
+    _MAX_BUCKET,
+    _bucket_pairs,
     band_buckets,
-    minhash_lsh_candidates,
 )
 from azure_data_engineering_spark.sources.snapshot import (
     current_version,
@@ -58,41 +60,29 @@ from azure_data_engineering_spark.sources.snapshot import (
 
 
 def dedup_batch_against_store(
-    batch: DataFrame,
-    store_table: str,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 64,
-    bands: int = 16,
-    k: int = 3,
+    batch: DataFrame, store_table: str, text_col: str, id_col: str
 ) -> DataFrame:
-    """One round of continuous dedup: drop batch docs that (a) share
-    any band bucket with the persisted store, or (b) are intra-batch
-    near-dups of a lower-id batch doc; append the SURVIVORS' buckets
+    """One round of continuous dedup: drop batch docs that (a) are
+    intra-batch near-dups of a lower-id batch doc, or (b) share any
+    band bucket with the persisted store; append the SURVIVORS' buckets
     to the store as one atomic snapshot commit. Returns the surviving
     rows of `batch` (all original columns)."""
-    spark = batch.sparkSession
-    buckets = band_buckets(batch, text_col, id_col, num_hashes, bands, k)
-
-    # (a) history collisions: semi-join on the bucket key
+    # materialize once: the intra-batch pairs, the history semi-join
+    # and the store append all read these buckets, and neither the
+    # commit nor the returned survivors would otherwise reuse the
+    # shingle → minhash exchange
+    buckets = band_buckets(batch, text_col, id_col).localCheckpoint(eager=True)
+    # (a) intra-batch near-dups: the higher id of each candidate pair
+    doomed = _bucket_pairs(buckets, _MAX_BUCKET).select(F.col("id_b").alias("id"))
+    # (b) history collisions: semi-join on the bucket key
     if current_version(store_table) is not None:
-        store = snapshot_read(spark, store_table)
-        hist_dupes = (
-            buckets.join(store, ["band", "band_hash"], "left_semi").select("id").distinct()
+        store = snapshot_read(batch.sparkSession, store_table)
+        doomed = doomed.unionByName(
+            buckets.join(store, ["band", "band_hash"], "left_semi").select("id")
         )
-    else:
-        hist_dupes = spark.createDataFrame([], "id long")
-
-    # (b) intra-batch near-dups: keep the min id of each candidate pair
-    intra = minhash_lsh_candidates(batch, text_col, id_col, num_hashes, bands, k).select(
-        F.col("id_b").alias("id")
-    )
-
-    doomed = hist_dupes.unionByName(intra).distinct()
     survivors = batch.join(
-        doomed.withColumnRenamed("id", id_col), [id_col], "left_anti"
+        doomed.distinct().withColumnRenamed("id", id_col), [id_col], "left_anti"
     )
-
     # persist survivors' buckets — O(batch) append, atomic commit
     surv_buckets = buckets.join(
         survivors.select(F.col(id_col).alias("id")), ["id"], "left_semi"
@@ -107,9 +97,6 @@ def stream_neardup_filter(
     out_table: str,
     text_col: str,
     id_col: str,
-    num_hashes: int = 64,
-    bands: int = 16,
-    k: int = 3,
     checkpoint: str | None = None,
     query_name: str = "stream_neardup",
 ):
@@ -120,9 +107,7 @@ def stream_neardup_filter(
     replay on restart."""
 
     def dedup_and_emit(batch_df: DataFrame, batch_id: int) -> None:
-        survivors = dedup_batch_against_store(
-            batch_df, store_table, text_col, id_col, num_hashes, bands, k
-        )
+        survivors = dedup_batch_against_store(batch_df, store_table, text_col, id_col)
         survivors.write.mode("append").parquet(out_table)
 
     writer = stream.writeStream.foreachBatch(dedup_and_emit).queryName(query_name)

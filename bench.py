@@ -559,7 +559,7 @@ def _operator_only(spark, sf_dir: str) -> dict[str, float]:
     )
     corpus = d.unionByName(near)
     _put(out, "dedup_minhash_op", lambda: minhash_lsh_candidates(
-        corpus, "text", "doc_id", num_hashes=64, bands=16))
+        corpus, "text", "doc_id"))
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 20)
     _put(out, "ann_lsh_op", lambda: lsh_bucketed_top_k(q, emb, dim=64, k=3, planes=2))

@@ -161,6 +161,17 @@ class TestSubstringDedup:
         got = self._stats(spark, [(1, "a b"), (2, "a b")])
         assert got[1] == (2, 0, 0.0) and got[2] == (2, 0, 0.0)
 
+    def test_64bit_doc_ids(self, spark):
+        # xxhash64-style ids: a bigint doc_id * 1e7 first-occurrence key
+        # overflows; the lower id still keeps its span
+        from azure_data_engineering_spark.operators.dedup import duplicated_span_stats
+
+        df = spark.createDataFrame(
+            [(2**62, "x y z a"), (-(2**62), "x y z b")], "doc_id bigint, text string"
+        )
+        got = {r["doc_id"]: r["dup_tokens"] for r in duplicated_span_stats(df, k=3).collect()}
+        assert got == {2**62: 3, -(2**62): 0}
+
 
 class TestSubstringDedupSkew:
     def test_hot_gram_corpus_stays_linear(self, spark):

@@ -5,6 +5,7 @@ snapshot version per batch, and intra-batch copies resolve to min id."""
 
 from __future__ import annotations
 
+import os
 import time
 
 import pandas as pd
@@ -78,6 +79,29 @@ class TestBatchRounds:
         )
         assert S.snapshot_read(spark, store).count() == n1
 
+    def test_string_doc_ids(self, spark, tmp_path):
+        # URL / hash doc ids: the first round has no store to probe
+        store = str(tmp_path / "sigstore_str")
+        schema = "doc_id string, text string"
+        b1 = spark.createDataFrame([("d1", DOCS[1]), ("d2", DOCS[1]), ("d3", DOCS[2])], schema)
+        kept1 = sorted(r.doc_id for r in dedup_batch_against_store(b1, store, "text", "doc_id").collect())
+        assert kept1 == ["d1", "d3"]
+        b2 = spark.createDataFrame([("d4", DOCS[2]), ("d5", DOCS[3])], schema)
+        kept2 = [r.doc_id for r in dedup_batch_against_store(b2, store, "text", "doc_id").collect()]
+        assert kept2 == ["d5"]
+
+    def test_survivors_reuse_batch_buckets(self, spark, tmp_path):
+        # the batch is shingled and hashed once; the survivors read the
+        # materialized buckets instead of re-running the shingle explode
+        store = str(tmp_path / "sigstore_plan")
+        dedup_batch_against_store(_df(spark, [(1, DOCS[1])]), store, "text", "doc_id")
+        survivors = dedup_batch_against_store(
+            _df(spark, [(2, DOCS[2]), (3, DOCS[1]), (4, DOCS[3])]), store, "text", "doc_id"
+        )
+        assert sorted(r.doc_id for r in survivors.collect()) == [2, 4]
+        plan = survivors._jdf.queryExecution().executedPlan().toString()
+        assert "Generate explode(array_distinct" not in plan
+
 
 class TestStreaming:
     def test_two_microbatch_stream(self, spark, tmp_path):
@@ -89,10 +113,13 @@ class TestStreaming:
         pd.DataFrame({"doc_id": [1, 2], "text": [DOCS[1], DOCS[2]]}).to_parquet(
             src / "b0.parquet"
         )
-        time.sleep(1.05)
         pd.DataFrame(
             {"doc_id": [11, 12], "text": [DOCS[1], DOCS[3]]}
         ).to_parquet(src / "b1.parquet")
+        # the file source orders micro-batches by mtime
+        now = time.time()
+        for i, name in enumerate(["b0.parquet", "b1.parquet"]):
+            os.utime(src / name, (now - 10 + i, now - 10 + i))
 
         schema = spark.read.parquet(str(src)).schema
         stream = (
