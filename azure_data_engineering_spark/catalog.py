@@ -15,6 +15,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -46,13 +47,38 @@ def ensure_session_defaults(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
 
 
+# footer schema per table file version: inferring it runs a Spark job on
+# every load, and a workload loads the same few tables many times
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _footprint(path: str) -> tuple | None:
+    """(path, size, mtime) of a local table, None for a remote URI or a
+    missing path (those are inferred on every load)."""
+    if "://" in path:
+        return None
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (path, st.st_size, st.st_mtime_ns)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar vectorized parquet scan; Catalyst prunes columns and
     pushes predicates into this scan automatically."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     ensure_session_defaults(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    key = _footprint(path)
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        df = spark.read.schema(schema).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        if key is not None:
+            _SCHEMAS[key] = df.schema
     for c in {"events": ["ts"]}.get(name, []):
         df = restore_event_time(df, c)
     return df

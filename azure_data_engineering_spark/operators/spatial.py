@@ -444,11 +444,13 @@ def geometric_median(
     a k-row broadcast frame; each round is ONE corpus scan +
     map-side-combinable group reduce. Returns per group:
     (group, n_points, median_x, median_y, mean_dist)."""
+    # materialize the projected points ONCE: every round re-reads them,
+    # and without the checkpoint each round re-runs the upstream scan
     pts = df.select(
         F.col(group_col).alias("g"),
         F.col(x_col).cast("double").alias("x"),
         F.col(y_col).cast("double").alias("y"),
-    )
+    ).localCheckpoint(eager=True)
     dec = "decimal(38,9)"
     med = pts.groupBy("g").agg(
         F.round(

@@ -13,6 +13,7 @@ Files are streamed one-per-micro-batch (maxFilesPerTrigger=1).
 
 from __future__ import annotations
 
+import os
 import time
 
 import pandas as pd
@@ -34,7 +35,8 @@ def _write_batches(tmp_path, batches):
                 "value": values,
             }
         ).to_parquet(d / f"b{i}.parquet", coerce_timestamps="us")
-        time.sleep(1.05)  # distinct mtimes fix the batch order
+        # distinct mtimes fix the batch order
+        os.utime(d / f"b{i}.parquet", (time.time() - 100 + i,) * 2)
     return str(d)
 
 
@@ -104,7 +106,7 @@ def test_late_row_bridges_two_sessions(spark, tmp_path):
         pd.DataFrame(
             {"user_id": [7] * len(stamps), "ts": pd.to_datetime(stamps)}
         ).to_parquet(d / f"b{i}.parquet", coerce_timestamps="us")
-        time.sleep(1.05)
+        os.utime(d / f"b{i}.parquet", (time.time() - 100 + i,) * 2)
     schema = spark.read.parquet(str(d)).schema
     stream = (
         spark.readStream.schema(schema)

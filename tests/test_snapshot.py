@@ -225,8 +225,8 @@ class TestStreamingSink:
 
             part = g.glob(os.path.join(stage, "part-*.parquet"))[0]
             shutil.move(part, os.path.join(src, f"b{i}.parquet"))
-            if i == 0:
-                time.sleep(1.05)
+            if i == 0:  # distinct mtimes fix the batch order
+                os.utime(os.path.join(src, "b0.parquet"), (time.time() - 10,) * 2)
         schema = spark.read.parquet(src).schema
         stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
         q = stream_upsert_to_snapshot(stream, table, pk=["k"])

@@ -3,6 +3,7 @@ micro-batch staged MERGE, idempotent under checkpoint replay."""
 
 from __future__ import annotations
 
+import os
 import time
 
 import pandas as pd
@@ -38,7 +39,7 @@ def test_two_batches_merge_into_live_table(spark, tmp_path):
     pd.DataFrame({"k": [1, 2], "v": ["a", "b"], "version": [1, 1]}).to_parquet(
         src / "b0.parquet"
     )
-    time.sleep(1.05)
+    os.utime(src / "b0.parquet", (time.time() - 10,) * 2)  # b0 streams first
     pd.DataFrame({"k": [2, 3], "v": ["B", "c"], "version": [2, 1]}).to_parquet(
         src / "b1.parquet"
     )

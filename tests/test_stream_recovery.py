@@ -8,6 +8,7 @@ case to the streaming path (streaming/sinks.py)."""
 
 from __future__ import annotations
 
+import os
 import time
 
 import pandas as pd
@@ -22,7 +23,8 @@ def _write_batch_files(src, both=False):
         {"op": ["I", "I"], "k": [1, 2], "v": ["a", "b"], "version": [1, 1]}
     ).to_parquet(src / "b0.parquet")
     if both:
-        time.sleep(1.05)  # distinct mtime => deterministic file order
+        # distinct mtime => deterministic file order
+        os.utime(src / "b0.parquet", (time.time() - 10,) * 2)
         pd.DataFrame(
             {"op": ["U", "D", "I"], "k": [2, 1, 3], "v": ["B", "x", "c"], "version": [2, 2, 2]}
         ).to_parquet(src / "b1.parquet")
@@ -60,7 +62,7 @@ def test_crash_before_pointer_swap_then_resume(spark, tmp_path, monkeypatch):
 
     # ---- run 2: batch 1 arrives, but the process dies at the commit
     # point — manifest written, pointer swap never happens
-    time.sleep(1.05)
+    os.utime(src / "b0.parquet", (time.time() - 10,) * 2)
     pd.DataFrame(
         {"op": ["U", "D", "I"], "k": [2, 1, 3], "v": ["B", "x", "c"], "version": [2, 2, 2]}
     ).to_parquet(src / "b1.parquet")

@@ -3,6 +3,7 @@ snapshot table (foreachBatch, one commit per batch)."""
 
 from __future__ import annotations
 
+import os
 import time
 
 import pandas as pd
@@ -18,7 +19,7 @@ def test_two_batches_merge_into_target(spark, tmp_path):
     # batch 0: initial keys; batch 1: one update + one insert + an
     # in-batch duplicate (PK dedup picks highest version)
     pd.DataFrame({"k": [1, 2], "v": ["a", "b"], "version": [1, 1]}).to_parquet(src / "b0.parquet")
-    time.sleep(1.05)
+    os.utime(src / "b0.parquet", (time.time() - 10,) * 2)  # b0 streams first
     pd.DataFrame(
         {"k": [2, 3, 3], "v": ["B", "c_old", "c_new"], "version": [2, 1, 2]}
     ).to_parquet(src / "b1.parquet")
@@ -92,7 +93,7 @@ def test_stream_cdc_deletes_and_time_travel(spark, tmp_path):
     pd.DataFrame(
         {"k": [1, 2, 3], "v": ["a", "b", "c"], "op": ["I", "I", "I"]}
     ).to_parquet(src / "b0.parquet")
-    time.sleep(1.05)
+    os.utime(src / "b0.parquet", (time.time() - 10,) * 2)  # b0 streams first
     pd.DataFrame(
         {"k": [2, 3, 4], "v": ["B", "c", "d"], "op": ["U", "D", "I"]}
     ).to_parquet(src / "b1.parquet")

@@ -138,6 +138,7 @@ class TestLiveEngine:
             "state.RocksDBStateStoreProvider",
         )
         import glob
+        import os
         import shutil
         import time
 
@@ -161,8 +162,9 @@ class TestLiveEngine:
             e.filter(pred).coalesce(1).write.parquet(str(staging))
             part = glob.glob(str(staging / "part-*.parquet"))[0]
             shutil.move(part, str(src / f"b{i}.parquet"))
-            if i == 0:
-                time.sleep(1.05)
+        now = time.time()
+        for i in range(2):  # file order = batch order
+            os.utime(src / f"b{i}.parquet", (now - 10 + i, now - 10 + i))
         try:
             got = run_stream_to_table(
                 spark,
@@ -270,6 +272,7 @@ class TestLiveTimers:
         close user 1's session; user 2 re-arms on fresh input and its
         timer stays ahead of the final watermark, so it never emits."""
         import glob
+        import os
         import shutil
         import time
 
@@ -299,8 +302,9 @@ class TestLiveTimers:
             df.coalesce(1).write.parquet(str(staging))
             part = glob.glob(str(staging / "part-*.parquet"))[0]
             shutil.move(part, str(src / f"b{i}.parquet"))
-            if i == 0:
-                time.sleep(1.05)
+        now = time.time()
+        for i in range(2):  # file order = batch order
+            os.utime(src / f"b{i}.parquet", (now - 10 + i, now - 10 + i))
         try:
             got = run_stream_to_table(
                 spark,
@@ -328,12 +332,17 @@ class TestLiveProcessingTimeTimers:
         batch 0; a foreachBatch sink sleeps 4s per batch (idle_ms=3s),
         so by the time batch 1 (key 2 only) runs, key 1's timer has
         wall-expired and its count must flush. Key 2 re-arms on its
-        own input; whether the trailing availableNow batch fires it
-        depends on wall timing, so the test asserts key 1's row
-        exactly and, for key 2, only that any flush carries its full
-        total."""
+        own input; whether a trailing no-data batch fires it depends
+        on wall timing, so the test asserts key 1's row exactly and,
+        for key 2, only that any flush carries its full total.
+
+        ProcessingTime timers make every batch ask for another one, so
+        the availableNow query does not end by itself: the test stops
+        it after batch 2, the first no-data batch past both flushes."""
         import glob
+        import os
         import shutil
+        import threading
         import time
 
         from azure_data_engineering_spark.compat import ensure_protobuf
@@ -357,8 +366,9 @@ class TestLiveProcessingTimeTimers:
             df.coalesce(1).write.parquet(str(staging))
             part = glob.glob(str(staging / "part-*.parquet"))[0]
             shutil.move(part, str(src / f"b{i}.parquet"))
-            if i == 0:
-                time.sleep(1.05)
+        now = time.time()
+        for i in range(2):  # file order = batch order
+            os.utime(src / f"b{i}.parquet", (now - 10 + i, now - 10 + i))
         schema = spark.read.parquet(str(src)).schema
         stream = (
             spark.readStream.schema(schema)
@@ -366,11 +376,16 @@ class TestLiveProcessingTimeTimers:
             .parquet(str(src))
         )
         results = []
+        past_flushes = threading.Event()
 
         def sink(df, batch_id):
             results.extend(df.collect())
-            time.sleep(4.0)  # wall time so PT timers expire between batches
+            if batch_id >= 2:
+                past_flushes.set()
+            else:
+                time.sleep(4.0)  # wall time so PT timers expire between batches
 
+        q = None
         try:
             q = (
                 idle_key_flush(stream, idle_ms=3_000)
@@ -380,8 +395,13 @@ class TestLiveProcessingTimeTimers:
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(180)
+            deadline = time.monotonic() + 180
+            while q.isActive and not past_flushes.wait(1):
+                assert time.monotonic() < deadline, "batch 2 never ran"
+            assert q.exception() is None, q.exception()
         finally:
+            if q is not None:
+                q.stop()
             if old_provider is None:
                 spark.conf.unset(provider_conf)
             else:
