@@ -12,7 +12,8 @@ takes the minimum label among itself and its neighbors until a
 fixpoint. Each round is one join + one aggregation (shuffles on node
 id); rounds needed = graph diameter, and near-dup graphs are
 shallow (tight clusters), so a handful of rounds suffices. The loop is
-driver-CONTROLLED (a count per round to detect the fixpoint) but never
+driver-CONTROLLED (each round's label step carries a `changed` flag,
+and one isEmpty on the checkpointed step detects the fixpoint) but never
 driver-MATERIALIZED — labels stay distributed; lineage is truncated
 every round with localCheckpoint so the plan doesn't grow with
 iterations (the standard Spark iterative-algorithm pattern; cf.
@@ -60,24 +61,18 @@ def connected_components(
             .groupBy(F.col("a").alias("node"))
             .agg(F.min("component").alias("nbr_component"))
         )
-        new_labels = (
+        nbr = F.col("nbr_component")
+        step = (
             labels.join(nbr_min, "node", "left")
             .select(
                 "node",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nbr_component"), F.col("component"))
-                ).alias("component"),
+                F.least(F.col("component"), F.coalesce(nbr, F.col("component"))).alias("component"),
+                F.coalesce(nbr < F.col("component"), F.lit(False)).alias("changed"),
             )
             .localCheckpoint()  # truncate lineage; also materializes for the fixpoint check
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
+        labels = step.select("node", "component")
+        if step.filter("changed").isEmpty():
             return labels
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 

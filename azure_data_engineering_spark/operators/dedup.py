@@ -139,19 +139,14 @@ def minhash_signatures(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     16-byte re-hash — every operator whole-stage-codegen (array-lambda
     folds are interpreted in Spark and measured ~50x slower). The
     groupBy shuffles only (id, 64 longs) after map-side partial
-    min-combine."""
+    min-combine. The lanes are one SQL expression: built lane by lane
+    through the Column API they cost the driver thousands of py4j round
+    trips per call."""
     ex = _ensure_parallelism(df.select(id_col, text_col)).select(
         F.col(id_col), F.explode(shingles(F.col(text_col), _SHINGLE_K)).alias("__s")
     ).withColumn("__h", F.xxhash64("__s"))
-    aggs = [
-        F.min(F.xxhash64(F.lit(j).cast("bigint"), F.col("__h"))).alias(f"__m{j}")
-        for j in range(_NUM_HASHES)
-    ]
-    return (
-        ex.groupBy(id_col)
-        .agg(*aggs)
-        .select(F.col(id_col), F.array(*[f"__m{j}" for j in range(_NUM_HASHES)]).alias("signature"))
-    )
+    lanes = ", ".join(f"min(xxhash64(CAST({j} AS BIGINT), __h))" for j in range(_NUM_HASHES))
+    return ex.groupBy(id_col).agg(F.expr(f"array({lanes})").alias("signature"))
 
 
 def band_buckets(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -159,21 +154,20 @@ def band_buckets(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     _BANDS groups of _NUM_HASHES/_BANDS lanes, each group hashed to one
     bucket key. The shared banding step behind minhash_lsh_candidates
     (in-corpus pairs) and streaming/dedup_stream (probe vs a persisted
-    store). Band hashes are unrolled statically (getItem + concat_ws +
-    xxhash64 stay in codegen; a transform/sequence lambda would be
-    interpreted)."""
+    store). Band hashes are unrolled statically into one SQL expression
+    (getItem + concat_ws + xxhash64 stay in codegen; a transform/sequence
+    lambda would be interpreted)."""
     r = _NUM_HASHES // _BANDS
     sig = minhash_signatures(df, text_col, id_col)
-    band_hashes = F.array(
-        *[
-            F.xxhash64(
-                F.concat_ws(",", *[F.col("signature")[b * r + i].cast("string") for i in range(r)])
-            )
-            for b in range(_BANDS)
-        ]
+    band_hashes = ", ".join(
+        "xxhash64(concat_ws(',', "
+        + ", ".join(f"CAST(signature[{b * r + i}] AS STRING)" for i in range(r))
+        + "))"
+        for b in range(_BANDS)
     )
     return sig.select(
-        F.col(id_col).alias("id"), F.posexplode(band_hashes).alias("band", "band_hash")
+        F.col(id_col).alias("id"),
+        F.posexplode(F.expr(f"array({band_hashes})")).alias("band", "band_hash"),
     )
 
 

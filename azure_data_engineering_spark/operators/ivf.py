@@ -11,8 +11,8 @@ Spark-first shape:
 - training: numpy Lloyd on the driver over a bounded sample, the first
   _MAX_TRAIN rows by id (no RNG, the same sample on every run) — at
   100 TB train on a ~1M-row sample, never the full corpus;
-- assignment: centroids broadcast as literals; nearest-centroid is a
-  codegen expression (argmax over nlist dot products), no UDF;
+- assignment: centroids inlined as one literal; nearest-centroid is a
+  Catalyst expression (argmax over nlist dot products), no UDF;
 - search: queries join the corpus on cell id (hash equi-join on a
   low-cardinality key — prefer nlist >> shuffle partitions at scale),
   exact cosine within the probed cells (the Arrow-batched kernel,
@@ -85,19 +85,31 @@ def train_centroids(
     return _lloyd(_train_sample(corpus, vec_col, id_col), nlist)
 
 
+def _sql_double(x: float) -> str:
+    """Exact Spark SQL literal of a float: repr is the shortest string
+    that round-trips, and the parser reads it back with the same
+    correctly rounded conversion; non-finite values are cast from their
+    Spark names."""
+    if np.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if np.isinf(x):
+        return "CAST('Infinity' AS DOUBLE)" if x > 0 else "CAST('-Infinity' AS DOUBLE)"
+    return f"{float(x)!r}D"
+
+
 def _nearest_cells(vec: Column, centroids: list[list[float]], nprobe: int) -> Column:
-    """Array of the nprobe cell ids with highest dot(vec, centroid) —
-    a static argtop-n unrolled over literal centroid arrays (codegen,
-    no UDF). nlist is small (hundreds), so the unrolled expression is
-    cheap relative to corpus math."""
-    scores = F.array(
-        *[
-            F.struct(
-                dot(vec, F.array(*[F.lit(float(x)) for x in c])).alias("score"),
-                F.lit(i).alias("cell"),
-            )
-            for i, c in enumerate(centroids)
-        ]
+    """Array of the nprobe cell ids with highest dot(vec, centroid),
+    ties to the higher cell id — a static argtop-n over the centroids as
+    one SQL array literal, scored by one transform over it (no UDF).
+    Building it costs a fixed handful of py4j round trips whatever nlist
+    and dim are; one Column literal per component would cost round
+    trips per component (~128k for 256 x 64, seconds of driver time
+    before any job runs)."""
+    cents = "array(" + ", ".join(
+        "array(" + ", ".join(_sql_double(x) for x in c) + ")" for c in centroids
+    ) + ")"
+    scores = F.transform(
+        F.expr(cents), lambda c, i: F.struct(dot(vec, c).alias("score"), i.alias("cell"))
     )
     ranked = F.reverse(F.array_sort(scores))  # by score asc -> reversed = desc
     return F.transform(F.slice(ranked, 1, nprobe), lambda s: s["cell"])

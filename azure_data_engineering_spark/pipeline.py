@@ -249,6 +249,7 @@ def clean_corpus(
     stage — the numbers a curation run has to log."""
 
     def run() -> dict[str, Any]:
+        from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
         from azure_data_engineering_spark.functions.text import (
@@ -258,8 +259,12 @@ def clean_corpus(
         from azure_data_engineering_spark.operators.relational import dedup_keep_first
         from azure_data_engineering_spark.operators.sampling import cap_per_group
 
-        n_in = df.count()
-        filtered = df.filter(whitespace_token_count(F.col(text_col)) >= min_tokens)
+        # both counts are observed on the one write: no extra scan
+        seen_in, seen_out = Observation("rows_in"), Observation("rows_out")
+        rows = F.count(F.lit(1)).alias("n")
+        filtered = df.observe(seen_in, rows).filter(
+            whitespace_token_count(F.col(text_col)) >= min_tokens
+        )
         # keep-first survivor per normalized text: retains ALL columns
         # (exact_dedup's aggregate form keeps only id + count)
         deduped = dedup_keep_first(
@@ -268,9 +273,8 @@ def clean_corpus(
             [id_col],
         ).drop("__norm")
         capped = cap_per_group(deduped, [group_col], id_col, cap_per_source)
-        capped.write.mode("overwrite").parquet(out_path)
-        n_out = capped.sparkSession.read.parquet(out_path).count()
-        return {"rows_in": n_in, "rows_out": n_out, "path": out_path}
+        capped.observe(seen_out, rows).write.mode("overwrite").parquet(out_path)
+        return {"rows_in": seen_in.get["n"], "rows_out": seen_out.get["n"], "path": out_path}
 
     return _timed(run)
 

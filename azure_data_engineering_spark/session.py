@@ -51,5 +51,16 @@ def get_spark(app_name: str = "azure-data-engineering-spark", *, shuffle_partiti
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # PySpark otherwise captures the Python call site of every
+        # pyspark.sql.functions call: a conf read through the JVM, a
+        # stack walk, and a set and clear of the JVM origin, which adds
+        # about 1 ms to each call (F.col: 1.4 ms against 0.5 ms on a
+        # 4-core host). Trade-off: a Spark error raised from a
+        # DataFrame-API expression no longer names the Python file:line
+        # that built it; its error class and message are unchanged.
+        # PySpark reads this once per Python process, at the first
+        # functions call under an active session, so it must be a
+        # builder conf (a runtime conf.set comes too late).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()

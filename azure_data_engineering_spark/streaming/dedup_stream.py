@@ -25,7 +25,8 @@ Scale notes:
   operators/dedup.band_buckets), materialized once and shared by the
   intra-batch pairs, one join against the store and one append-only
   snapshot commit of the survivors' bucket rows (O(batch), never
-  rewrites history);
+  rewrites history); the survivors are materialized once, before that
+  commit, so the caller's write of them re-runs no join;
 - intra-batch duplicates resolve deterministically (min id wins) via
   the in-bucket pairs of the batch's own buckets, so a batch full of
   copies admits exactly one;
@@ -80,9 +81,12 @@ def dedup_batch_against_store(
         doomed = doomed.unionByName(
             buckets.join(store, ["band", "band_hash"], "left_semi").select("id")
         )
+    # materialize once: the store commit and the caller's write of the
+    # returned frame would otherwise each rescan the batch and re-run
+    # the anti-join
     survivors = batch.join(
         doomed.distinct().withColumnRenamed("id", id_col), [id_col], "left_anti"
-    )
+    ).localCheckpoint(eager=True)
     # persist survivors' buckets — O(batch) append, atomic commit
     surv_buckets = buckets.join(
         survivors.select(F.col(id_col).alias("id")), ["id"], "left_semi"

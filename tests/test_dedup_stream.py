@@ -102,6 +102,19 @@ class TestBatchRounds:
         plan = survivors._jdf.queryExecution().executedPlan().toString()
         assert "Generate explode(array_distinct" not in plan
 
+    def test_survivors_are_evaluated_once(self, spark, tmp_path):
+        # the store commit and the caller's write share one materialized
+        # survivor set: the returned frame re-runs neither the batch
+        # scan's anti-join nor the bucket joins
+        store = str(tmp_path / "sigstore_once")
+        dedup_batch_against_store(_df(spark, [(1, DOCS[1])]), store, "text", "doc_id")
+        survivors = dedup_batch_against_store(
+            _df(spark, [(2, DOCS[2]), (3, DOCS[1])]), store, "text", "doc_id"
+        )
+        plan = survivors._jdf.queryExecution().executedPlan().toString()
+        assert "Join" not in plan
+        assert [r.doc_id for r in survivors.collect()] == [2]
+
 
 class TestStreaming:
     def test_two_microbatch_stream(self, spark, tmp_path):

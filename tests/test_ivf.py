@@ -74,6 +74,30 @@ class TestIvf:
         cells = emb.select(_nearest_cells(F.col("embedding"), cents, 1)[0].alias("cell"))
         assert cells.distinct().count() > 1
 
+    def test_nearest_cells_exact_on_awkward_values(self, spark):
+        """The centroids travel as one SQL literal: every value must
+        parse back to the same double, so the cells equal numpy's
+        arg-top-n of the same left-fold dot (ties to the higher cell)."""
+        awkward = [1 / 3, 1e-300, -0.0, 5e-324, 1e308, -1 / 3, 2.0 / 7, -5e-324]
+        rng = np.random.default_rng(7)
+        C = rng.uniform(-1, 1, (6, 8))
+        for i in range(6):
+            C[i, i] = awkward[i]
+        C[5] = awkward[::-1]
+        V = rng.uniform(-1, 1, (40, 8))
+        score = np.add.accumulate(V[:, None, :] * C[None, :, :], axis=2)[:, :, -1]
+        want = [sorted(range(6), key=lambda j: (s[j], j), reverse=True)[:4] for s in score]
+        df = spark.createDataFrame([(i, v.tolist()) for i, v in enumerate(V)], "i int, v array<double>")
+        got = df.orderBy("i").select(_nearest_cells(F.col("v"), C.tolist(), 4).alias("c")).collect()
+        assert [r.c for r in got] == want
+
+    def test_nearest_cells_non_finite_centroid(self, spark):
+        # Spark orders NaN above every number: a NaN score ranks first
+        cents = [[float("nan"), 1.0], [float("inf"), 1.0], [float("-inf"), 1.0], [0.5, 0.5]]
+        df = spark.createDataFrame([(1, [1.0, 1.0]), (2, [-1.0, 1.0])], "i int, v array<double>")
+        got = df.orderBy("i").select(_nearest_cells(F.col("v"), cents, 4).alias("c")).collect()
+        assert [r.c for r in got] == [[0, 1, 3, 2], [0, 2, 3, 1]]
+
     def test_empty_corpus_raises(self, spark, sf_dir):
         emb = load_table(spark, sf_dir, "embeddings").limit(0)
         with pytest.raises(ValueError, match="no finite training vector"):
